@@ -139,7 +139,8 @@ leg() {
 IDLE_GRACE_MINS=${GRAFT_CAMPAIGN_IDLE_GRACE_MINS:-15}
 for r in $(seq 1 "$ROUNDS"); do
   ELAPSED_MINS=$(( ($(date +%s) - T_START) / 60 ))
-  if [ "$ELAPSED_MINS" -ge "$((BUDGET_MINS - IDLE_GRACE_MINS))" ]; then
+  # r > 1: a budget at or below the idle grace still runs one round
+  if [ "$r" -gt 1 ] && [ "$ELAPSED_MINS" -ge "$((BUDGET_MINS - IDLE_GRACE_MINS))" ]; then
     echo "[scaling-driver] budget ${BUDGET_MINS}m (incl. ${IDLE_GRACE_MINS}m idle grace) exhausted after $((r-1)) rounds — summarizing early"
     break
   fi

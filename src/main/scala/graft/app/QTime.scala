@@ -5,8 +5,9 @@ import graft.SparkEntry
 /** One-off timer for individual SparkEntry queries — the iteration loop
   * for plan tuning (Bench runs the whole suite; this runs just the named
   * queries). Uses the SAME session tuning as Bench (graft.core.Sessions)
-  * and the same action (count + cache clear between timings), so numbers
-  * are comparable; repeats each query GRAFT_QTIME_REPS times (default 3)
+  * and the same action (count + cache clear between timings: the timed
+  * call runs in a Scope closed after it), so numbers are comparable;
+  * repeats each query GRAFT_QTIME_REPS times (default 3)
   * and prints each sample plus the min — the right statistic on a
   * time-shared box where single shots swing with host weather.
   * Usage: runMain graft.app.QTime <sfDir> <query> [query ...] */
@@ -20,11 +21,10 @@ object QTime {
       val fn = SparkEntry.queries(q)
       val samples = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
-        val n = fn(spark, args(0)).count()
+        val (n, close) = graft.core.Scope.run(fn(spark, args(0)).count())
         val sec = (System.nanoTime() - t0) / 1e9
         // same isolation as Bench: each timing starts cold
-        spark.sparkContext.getPersistentRDDs.valuesIterator
-          .foreach(_.unpersist(blocking = false))
+        close()
         spark.sharedState.cacheManager.clearCache()
         (sec, n)
       }

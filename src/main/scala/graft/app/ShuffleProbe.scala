@@ -60,18 +60,18 @@ object ShuffleProbe {
       import spark.implicits._
       val chunksT = graft.build.Chunker.chunks(Corpus.docs(spark, nDocs))
       val ex = new DeterministicExtractor
-      val logs = graft.core.Materialize.eager(
+      val logs = graft.core.Scope.persist(
         graft.extract.Extract.withProperties(
           graft.extract.Extract.rawLogs(chunksT,
             graft.build.Chunker.visualSpans(Corpus.docs(spark, nDocs)), ex), ex).toDF())
       logs.count() // materialized before the listener attaches
       spark.sparkContext.addSparkListener(acc)
       val t0 = System.nanoTime()
-      val link = graft.link.Linker.canonicalMappingResult(
-        logs.as[graft.core.ExtractionLog])
-      triples = link.mapping.count()
+      val (mapping, freeLinker) = graft.core.Scope.run(
+        graft.link.Linker.canonicalMapping(logs.as[graft.core.ExtractionLog]))
+      triples = mapping.count()
       wall = (System.nanoTime() - t0) / 1e9
-      link.cleanup()
+      freeLinker()
     } else {
       spark.sparkContext.addSparkListener(acc)
       val t0 = System.nanoTime()

@@ -39,8 +39,7 @@ object Communities {
       communityEdges: DataFrame, // level-1 EdgeRow-shaped
       communityProperties: DataFrame, // PropertyRow-shaped (findings)
       docNodes: DataFrame, // level-2 NodeRow-shaped
-      docProperties: DataFrame, // keyword properties of doc nodes
-      cleanup: () => Unit = () => ()) // frees comps/membership persists
+      docProperties: DataFrame) // keyword properties of doc nodes
 
   // ids are codegen built-ins (Ids.idCol), not UDFs — see core/Schema.scala
   private def commIdUdf(doc: Column, minMember: Column): Column =
@@ -50,6 +49,7 @@ object Communities {
   private def edgeIdUdf(a: Column, b: Column, d: Column): Column =
     Ids.idCol(lit("edge"), a, b, d)
 
+  /** The components and membership persists land in the current [[Scope]]. */
   def build(
       nodes: Dataset[NodeRow],
       edges: Dataset[EdgeRow],
@@ -70,10 +70,9 @@ object Communities {
     val edgePairs = edges.toDF().select(
       element_at(col("metadata"), 1).getField("document_id").as("key"),
       col("frm").as("a"), col("to").as("b"))
-    spark.sparkContext.setJobDescription("graft-comm:components")
-    val comps = graft.core.Materialize.eager(
+    val comps = Scope.labeled(spark, "graft-comm:components")(Scope.persist(
       ConnectedComponents.runPerKey(vertices, edgePairs)
-        .select(col("key").as("doc_id"), col("v").as("node_id"), col("component")))
+        .select(col("key").as("doc_id"), col("v").as("node_id"), col("component"))))
 
     // Leiden-style refinement inside each component (components are
     // per-document entity graphs — small — so this is a local flatMapGroups,
@@ -103,11 +102,9 @@ object Communities {
       .select(col("doc_id"), col("sub_component"),
         commIdUdf(col("doc_id"), col("min_member")).as("community_id"))
 
-    spark.sparkContext.setJobDescription("graft-comm:membership")
-    val membership = graft.core.Materialize.eager(
+    val membership = Scope.labeled(spark, "graft-comm:membership")(Scope.persist(
       refined.join(commIds, Seq("doc_id", "sub_component"))
-        .select(col("doc_id"), col("node_id"), col("community_id")))
-    spark.sparkContext.setJobDescription(null)
+        .select(col("doc_id"), col("node_id"), col("community_id"))))
 
     // --- level-0 nodes annotated with their community ---------------------
     val nodesWithCommunity = n0
@@ -215,8 +212,7 @@ object Communities {
       communityEdges,
       communityProperties,
       docNodes.drop("doc_id"),
-      docProperties,
-      () => { comps.unpersist(blocking = false); membership.unpersist(blocking = false) })
+      docProperties)
   }
 
   /** F5 — community CSV rendering (reference

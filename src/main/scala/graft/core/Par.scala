@@ -17,126 +17,16 @@ object Par {
         val t = new Thread(r, "graft-par"); t.setDaemon(true); t
       })
 
-  /** Run `body` on the pool; the active SparkSession is thread-local, so
-    * re-pin it before any SQL work. */
-  def fork[T](spark: SparkSession)(body: => T): scala.concurrent.Future[T] =
-    scala.concurrent.Future { SparkSession.setActiveSession(spark); body }(pool)
+  /** Run `body` on the pool; the active SparkSession and the current
+    * [[Scope]] are thread-local, so re-pin both before any SQL work. */
+  def fork[T](spark: SparkSession)(body: => T): scala.concurrent.Future[T] = {
+    val scope = Scope.active
+    scala.concurrent.Future {
+      SparkSession.setActiveSession(spark)
+      Scope.within(scope)(body)
+    }(pool)
+  }
 
   def await[T](f: scala.concurrent.Future[T]): T =
     scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
-}
-
-/** Materialize-once for INTERNAL multi-consumer intermediates: eager
-  * persist instead of localCheckpoint. Same barrier semantics, two
-  * differences that matter in a shared local-mode heap:
-  *   1. blocks are freed DETERMINISTICALLY by `unpersist()` (stage cleanup
-  *      hooks) — localCheckpoint blocks wait for driver-GC + ContextCleaner
-  *      and pin memory for the whole build;
-  *   2. lineage stays intact, so freeing early is always SAFE — a late
-  *      consumer recomputes from the upstream checkpoint instead of
-  *      crashing on missing checkpoint blocks.
-  */
-object Materialize {
-
-  /** SERIALIZED storage for every cached intermediate. Two reasons:
-    *   1. remote fetch of a cached block between executors streams the
-    *      stored bytes directly — a DESERIALIZED level must serialize
-    *      per fetch, and Spark 4.1 fails outright on remote reads of
-    *      empty deserialized partitions ("Empty buffer received for non
-    *      empty block"), which at shuffle.partitions > live data volume
-    *      (small builds, AQE-coalesced tails) turned every off-executor
-    *      task over an empty partition into a full lineage recompute —
-    *      measured 8x aggregate-CPU amplification at 4x8 executors;
-    *   2. serialized UnsafeRow blocks are compact (Kryo + LZ4), the right
-    *      default when aggregate cache across a cluster is the scarce
-    *      resource. */
-  private val CacheLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-
-  def eager(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val p = df.persist(CacheLevel)
-    // count(), NOT foreachPartition: foreachPartition is a typed action that
-    // deserializes every InternalRow to an external Row (GenerateSafeProjection
-    // per row — jstack showed all workers blocked on its codegen lock, then
-    // paying object conversion for every wide metadata row). count() plans a
-    // codegen aggregate over the persisted scan and populates the cache as a
-    // side effect, no row conversion.
-    p.count()
-    p
-  }
-
-  /** Pipeline-stage materialization: persist the stage's InternalRow RDD
-    * and wrap it as a fresh LogicalRDD DataFrame. This cuts the SQL plan
-    * tree at the stage boundary (without a cut, each stage's plan embeds
-    * every upstream stage's plan — by the final unions the tree is big
-    * enough that merely rendering its explain string OOMs an 8 GiB driver)
-    * while KEEPING the RDD lineage, so a lost or unfetchable cached block
-    * silently recomputes instead of failing the way a truncated
-    * localCheckpoint does (multi-executor runs hit exactly that: Spark
-    * cannot remote-fetch an empty deserialized cached partition).
-    * The `.map(_.copy())` is required because upstream operators reuse
-    * their output row buffer — same as Dataset.localCheckpoint's own
-    * materialization path. */
-  def stageCut(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    stageCutHandle(df)._1
-
-  /** [[stageCut]] plus the persisted RDD handle, for iterative callers
-    * that free superseded iterations deterministically (the CC loop would
-    * otherwise pin one full label-table copy per iteration for the
-    * session's lifetime). Unpersisting early is always safe: the RDD
-    * lineage is kept, so a late consumer recomputes instead of failing. */
-  def stageCutHandle(df: org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame,
-         org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]) = {
-    val (d, r, _) = stageCutHandleN(df)
-    (d, r)
-  }
-
-  /** [[stageCutHandle]] plus the ROW COUNT of the materialized stage —
-    * the materializing action is a count anyway, so iterative callers
-    * whose convergence test needs the count (the big-star CC fixpoint)
-    * get it for free instead of paying a second count job per iteration. */
-  def stageCutHandleN(df: org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame,
-         org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-         Long) = {
-    val rdd = df.queryExecution.toRdd.map(_.copy())
-      .persist(CacheLevel)
-    val n = rdd.count()
-    (org.apache.spark.sql.GraftShims.fromInternalRdd(df.sparkSession, rdd, df.schema), rdd, n)
-  }
-
-  /** [[stageCutHandle]] WITHOUT the materializing count: persist + wrap
-    * only. The FIRST consumer populates the cache (the block manager's
-    * per-partition locking dedups concurrent computation — two forked
-    * consumers hitting the same uncomputed cached partition compute it
-    * once and share it), so the upstream plan still runs exactly once,
-    * but the producer thread never blocks — its consumers can be forked
-    * immediately instead of waiting behind an eager count barrier. */
-  def stageCutLazyHandle(df: org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame,
-         org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]) = {
-    val rdd = df.queryExecution.toRdd.map(_.copy())
-      .persist(CacheLevel)
-    (org.apache.spark.sql.GraftShims.fromInternalRdd(df.sparkSession, rdd, df.schema), rdd)
-  }
-
-  /** [[stageCutHandle]] that additionally counts rows whose BOOLEAN column
-    * at `boolOrdinal` is true, folded into the SAME materializing action
-    * via an accumulator (foreach over the persisted InternalRow RDD — a
-    * plain RDD action, no external-Row conversion). One job instead of
-    * two per iteration for loops whose convergence probe is a
-    * changed-row count (the min-label CC). Accumulator updates inside an
-    * action are applied exactly once per task, so the count is exact. */
-  def stageCutHandleFlagCount(df: org.apache.spark.sql.DataFrame, boolOrdinal: Int)
-      : (org.apache.spark.sql.DataFrame,
-         org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-         Long) = {
-    val spark = df.sparkSession
-    val acc = spark.sparkContext.longAccumulator("stage-cut-flag-count")
-    val rdd = df.queryExecution.toRdd.map(_.copy())
-      .persist(CacheLevel)
-    rdd.foreach(r => if (!r.isNullAt(boolOrdinal) && r.getBoolean(boolOrdinal)) acc.add(1L))
-    (org.apache.spark.sql.GraftShims.fromInternalRdd(df.sparkSession, rdd, df.schema),
-      rdd, acc.value)
-  }
 }

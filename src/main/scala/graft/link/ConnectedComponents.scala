@@ -1,5 +1,6 @@
 package graft.link
 
+import graft.core.Scope
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -14,7 +15,7 @@ import org.apache.spark.sql.functions._
   * one entity name is globally hot.
   *
   * Each iteration propagates the minimum label one hop and cuts the
-  * accumulated plan at a persisted materialization (Materialize.stageCut:
+  * accumulated plan at a persisted materialization (Scope.cut:
   * plan truncated, RDD lineage kept — cluster-safe, unlike localCheckpoint
   * whose blocks are unrecoverable if a remote fetch fails); convergence is
   * detected via a
@@ -32,24 +33,17 @@ object ConnectedComponents {
     * exactly as in [[runPerKey]]'s union-find) but are not emitted.
     *
     * Superseded iteration caches are freed deterministically (only the
-    * final labels stay persisted for the consumer); on non-convergence at
+    * final labels stay persisted for the consumer, registered with the
+    * current [[graft.core.Scope]]); on non-convergence at
     * `maxIter` the partial labels are still returned — one component may
     * be reported as several — with a loud stderr warning, since silently
     * splitting a component would corrupt dedup groups downstream. */
-  def run(vertices: DataFrame, edges: DataFrame, maxIter: Int = 25): DataFrame =
-    runHandle(vertices, edges, maxIter)._1
-
-  /** [[run]] plus the final persisted label RDD, so long-lived callers can
-    * free the one cache this loop leaves behind deterministically (the
-    * lineage is kept — a post-unpersist consumer recomputes instead of
-    * failing). */
-  def runHandle(vertices: DataFrame, edges: DataFrame, maxIter: Int = 25)
-      : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]) = {
+  def run(vertices: DataFrame, edges: DataFrame, maxIter: Int = 25): DataFrame = {
     // adjacency in both directions, deduped
-    val (adj, adjRdd) = graft.core.Materialize.stageCutHandle(
+    val adj = Scope.cut(
       edges.select(col("key"), col("a"), col("b"))
         .union(edges.select(col("key"), col("b").as("a"), col("a").as("b")))
-        .distinct())
+        .distinct()).df
 
     // declared vertices + ghost endpoints (decl=false), so bridging through
     // an undeclared endpoint matches runPerKey's union-find semantics
@@ -58,7 +52,8 @@ object ConnectedComponents {
       .unionByName(edges.select(col("key"), col("b").as("v"), lit(false).as("decl")))
       .groupBy(col("key"), col("v")).agg(max(col("decl")).as("decl"))
       .select(col("key"), col("v"), col("v").as("label"), col("decl"))
-    var (labels, labelsRdd) = graft.core.Materialize.stageCutHandle(init)
+    var labelsCut = Scope.cut(init).df
+    var labels = labelsCut
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -76,25 +71,23 @@ object ConnectedComponents {
           (col("nbr_label").isNotNull && col("nbr_label") < col("label")).as("changed"))
       val t0 = System.nanoTime()
       // changed-row probe folded into the materializing action itself
-      // (accumulator over the persisted rows, ordinal 4 = `changed`) —
-      // one job per iteration where the round-5 loop paid two
-      val (cp, cpRdd, changed) =
-        graft.core.Materialize.stageCutHandleFlagCount(updated, 4)
-      labelsRdd.unpersist(blocking = false) // superseded; cp holds the data
-      labelsRdd = cpRdd
-      labels = cp.select(col("key"), col("v"), col("new_label").as("label"), col("decl"))
-      converged = changed == 0L
+      // (ordinal 4 = `changed`) — one job per iteration where the round-5
+      // loop paid two
+      val cp = Scope.cut(updated, flagOrdinal = 4)
+      Scope.free(labelsCut) // superseded; cp holds the data
+      labelsCut = cp.df
+      labels = cp.df.select(col("key"), col("v"), col("new_label").as("label"), col("decl"))
+      converged = cp.flagged == 0L
       iter += 1
       if (sys.env.contains("GRAFT_STAGE_TIMING"))
-        System.err.println(f"[cc-timing] iter=$iter changed=${changed > 0} ${(System.nanoTime() - t0) / 1e9}%6.2f s")
+        System.err.println(f"[cc-timing] iter=$iter changed=${cp.flagged > 0} ${(System.nanoTime() - t0) / 1e9}%6.2f s")
     }
-    adjRdd.unpersist(blocking = false)
+    Scope.free(adj)
     if (!converged)
       System.err.println(s"[graft] WARNING: connected components did NOT converge in " +
         s"$maxIter iterations — a component with diameter > $maxIter is split into " +
         s"several labels; raise maxIter (or use large-star/small-star) for this graph")
-    (labels.filter(col("decl")).select(col("key"), col("v"), col("label").as("component")),
-      labelsRdd)
+    labels.filter(col("decl")).select(col("key"), col("v"), col("label").as("component"))
   }
 
   /** Large-star/small-star connected components (Kiveris et al. 2014,
@@ -115,19 +108,15 @@ object ConnectedComponents {
     * canonical set and the fixpoint test is an exact set compare of two
     * cached iterations, not a checksum. At fixpoint the relation is a
     * star: every non-root points directly at its component minimum. */
-  def runBigStar(vertices: DataFrame, edges: DataFrame, maxIter: Int = 40): DataFrame =
-    runBigStarHandle(vertices, edges, maxIter)._1
-
-  /** [[runBigStar]] plus the final persisted RDD for deterministic cache
-    * release (same discipline as [[runHandle]]). */
-  def runBigStarHandle(vertices: DataFrame, edges: DataFrame, maxIter: Int = 40)
-      : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]) = {
+  def runBigStar(vertices: DataFrame, edges: DataFrame, maxIter: Int = 40): DataFrame = {
     // canonical orientation u > v; self-loops dropped; set semantics
     val init = edges
       .select(col("key"), greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
     // stage-cut counts ride the materializing action (no second count job)
-    var (p, pRdd, prevCount) = graft.core.Materialize.stageCutHandleN(init)
+    val first = Scope.cut(init)
+    var p = first.df
+    var prevCount = first.rows
     var iter = 0
     var converged = prevCount == 0L
     while (!converged && iter < maxIter) {
@@ -159,15 +148,15 @@ object ConnectedComponents {
         .filter(col("x") =!= col("m"))
         .select(col("key"), col("x").as("u"), col("m").as("v"))
         .distinct()
-      val (cp, cpRdd, curCount) = graft.core.Materialize.stageCutHandleN(small)
+      val cp = Scope.cut(small)
       // exact set fixpoint: both sides cached, equal counts + empty diff
       // (the except only runs once counts agree — near convergence)
-      converged = curCount == prevCount && cp.except(p).limit(1).count() == 0L
-      pRdd.unpersist(blocking = false)
-      p = cp; pRdd = cpRdd; prevCount = curCount
+      converged = cp.rows == prevCount && cp.df.except(p).limit(1).count() == 0L
+      Scope.free(p)
+      p = cp.df; prevCount = cp.rows
       iter += 1
       if (sys.env.contains("GRAFT_STAGE_TIMING"))
-        System.err.println(f"[cc-bigstar] iter=$iter pairs=$curCount ${(System.nanoTime() - t0) / 1e9}%6.2f s")
+        System.err.println(f"[cc-bigstar] iter=$iter pairs=${cp.rows} ${(System.nanoTime() - t0) / 1e9}%6.2f s")
     }
     if (!converged)
       System.err.println(s"[graft] WARNING: large-star/small-star did NOT reach its " +
@@ -177,10 +166,9 @@ object ConnectedComponents {
     // partial relation where u could still carry several parents.
     val lbl = p.groupBy("key", "u").agg(min("v").as("m"))
       .select(col("key"), col("u").as("v"), col("m"))
-    val out = vertices.select(col("key"), col("v"))
+    vertices.select(col("key"), col("v"))
       .join(lbl, Seq("key", "v"), "left")
       .select(col("key"), col("v"), coalesce(col("m"), col("v")).as("component"))
-    (out, pRdd)
   }
 
   /** Per-key exact components in ONE shuffle: groupByKey(key) + local

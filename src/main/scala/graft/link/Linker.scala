@@ -109,7 +109,7 @@ object Linker {
     * (doc_id, name_norm, display) with map-side combine. Same rows as
     * `uniqueNamesSlimFrom(mentionAgg(logs))` — the global min(display) is
     * the min of the per-chunk mins — but the description payloads never
-    * enter ANY corpus-wide shuffle; [[canonicalMappingResult]] re-derives
+    * enter ANY corpus-wide shuffle; [[canonicalMapping]] re-derives
     * them from the (materialized) logs for the ambiguous ~2% of documents
     * only. */
   def uniqueNamesSlim(logs: Dataset[ExtractionLog]): DataFrame =
@@ -140,7 +140,7 @@ object Linker {
     * columns the prefix-blocking join, connected components, and cluster
     * resolution actually read. The description payloads (KBs per name on
     * real corpora — the dominant linker shuffle bytes) are NOT carried
-    * here; [[canonicalMappingResult]] recomputes them late from the
+    * here; [[canonicalMapping]] recomputes them late from the
     * mention aggregation for the ambiguous ~2% of documents only. */
   def uniqueNamesSlimFrom(agg: DataFrame): DataFrame =
     agg.groupBy(col("doc_id"), col("name_norm"))
@@ -211,22 +211,16 @@ object Linker {
     * chunk_id >= 0 rows are per-chunk overrides, emitted ONLY for members
     * of ambiguous clusters (several maximal candidates), re-ranked against
     * the occurrence's own chunk context — the reference's per-log
-    * assignment (node_matcher.py:199-296). */
-  /** Canonical mapping plus a cleanup hook that unpersists the linker's
-    * internal checkpoints — call it once the mapping stage itself is
-    * materialized. In local mode every eager localCheckpoint pins block-
-    * manager memory for the build's lifetime; freeing the linker's
-    * internal materializations (agg / names / resolved / ambiguous and
-    * the ambiguous-doc desc slices) after the
-    * mapping checkpoint exists cuts the live heap for all downstream
-    * stages (shared-heap GC pressure was the largest local-mode
-    * anti-scaling term at 96k docs). */
-  case class LinkResult(mapping: DataFrame, cleanup: () => Unit)
-
-  def canonicalMapping(logs: Dataset[ExtractionLog]): DataFrame =
-    canonicalMappingResult(logs).mapping
-
-  /** PRECONDITION: `logs` must be MATERIALIZED (checkpointed/persisted) or
+    * assignment (node_matcher.py:199-296).
+    *
+    * The linker's internal materializations (names / resolved / ambiguous
+    * and the ambiguous-doc desc slices) land in the current
+    * [[graft.core.Scope]]: run this in its own `Scope.run` and close it
+    * once the mapping stage itself is materialized — freeing them cuts the
+    * live heap for all downstream stages (shared-heap GC pressure was the
+    * largest local-mode anti-scaling term at 96k docs).
+    *
+    * PRECONDITION: `logs` must be MATERIALIZED (checkpointed/persisted) or
     * at least a deterministic plan. The round-5 split scans `logs` twice —
     * the slim name rollup here, and the ambiguous-slice re-aggregation
     * below — so a lazy plan over a NON-deterministic extractor (e.g. a
@@ -236,21 +230,10 @@ object Linker {
     * ShuffleProbe's eager cut); external callers with a lazy
     * non-deterministic source must cut it first. A deterministic lazy
     * plan (MappingDump) is correct but pays a second extraction pass. */
-  def canonicalMappingResult(logs: Dataset[ExtractionLog]): LinkResult = {
+  def canonicalMapping(logs: Dataset[ExtractionLog]): DataFrame = {
     val spark = logs.sparkSession
     import spark.implicits._
-
-    def timed[T](what: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      spark.sparkContext.setJobDescription(s"graft-link:$what")
-      val out = body
-      spark.sparkContext.setJobDescription(null)
-      if (sys.env.contains("GRAFT_STAGE_TIMING"))
-        System.err.println(f"[link-timing] $what%-12s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      out
-    }
-
-    def materialize(df: DataFrame): DataFrame = graft.core.Materialize.eager(df)
+    import graft.core.Scope.{labeled, persist}
 
     // SLIM name table straight from the logs: the blocking join,
     // union-find, and resolution read only (doc_id, name_norm, display).
@@ -269,7 +252,7 @@ object Linker {
     // 505 -> 1406 MiB — the rollup's exchange was not reused across the
     // three differently-projected subtrees), so the one-barrier cut is
     // the cheaper trade at scale.
-    val names = timed("names")(materialize(uniqueNamesSlim(logs)))
+    val names = labeled(spark, "graft-link:names")(persist(uniqueNamesSlim(logs)))
     // Dictionary encoding: a 64-bit xxhash64 id per name. Pair rows carry
     // 8-byte ids instead of name strings (matchedPairIds). A same-doc id
     // collision would merge two names; at ~2^-64 per same-doc name pair it
@@ -303,7 +286,7 @@ object Linker {
       .as[(String, Long, String, String)]
       .groupByKey(_._1)
     val pairRows = pairs.as[(String, Long, Long)].groupByKey(_._1)
-    val resolved = timed("resolved")(materialize(nameRows.cogroup(pairRows) {
+    val resolved = labeled(spark, "graft-link:resolved")(persist(nameRows.cogroup(pairRows) {
       (doc: String, ns: Iterator[(String, Long, String, String)],
        ps: Iterator[(String, Long, Long)]) =>
         // union-find over 8-byte ids with path compression (union-by-min
@@ -358,11 +341,11 @@ object Linker {
     // description text instead of all of it
     val logsAmbig = logs.toDF().join(ambigDocs, Seq("doc_id"), "left_semi")
       .as[graft.core.ExtractionLog]
-    val aggAmbig = materialize(mentionAgg(logsAmbig))
+    val aggAmbig = persist(mentionAgg(logsAmbig))
     // full name table (descs/ne_descs/prop_descs) for ambiguous docs —
     // containment gathering scans ALL names of the doc, so this derives
     // from the doc-scoped semi join, not from the ambiguous names alone
-    val namesAmbig = materialize(uniqueNamesFrom(aggAmbig))
+    val namesAmbig = persist(uniqueNamesFrom(aggAmbig))
 
     // A6 — candidate context gathered by SUBSTRING CONTAINMENT across the
     // doc's mention names (reference node_matcher.py:104-143: a candidate
@@ -386,7 +369,7 @@ object Linker {
     // candidates with containment-gathered context (falls back to empty
     // when nothing in the doc contains the candidate name); materialized
     // once — BOTH the doc-level default and the per-chunk overrides join it
-    val ambiguous = materialize(resolved.filter(size(col("candidates")) > 1)
+    val ambiguous = persist(resolved.filter(size(col("candidates")) > 1)
       .select(col("doc_id"), col("name_norm"), explode(col("candidates")).as("c"))
       .select(col("doc_id"), col("name_norm"),
         col("c._1").as("cand_norm"), col("c._2").as("cand_display"))
@@ -426,13 +409,7 @@ object Linker {
       .select(col("doc_id"), col("chunk_id"),
         col("name_norm"), col("cand_norm").as("canonical_norm"), col("cand_display").as("canonical"))
 
-    LinkResult(docLevel.unionByName(overrides), () => {
-      names.unpersist(blocking = false)
-      resolved.unpersist(blocking = false)
-      ambiguous.unpersist(blocking = false)
-      aggAmbig.unpersist(blocking = false)
-      namesAmbig.unpersist(blocking = false)
-    })
+    docLevel.unionByName(overrides)
   }
 
   /** A member's resolution: doc-level canonical plus, when the member was

@@ -30,17 +30,12 @@ import org.apache.spark.sql.functions._
   */
 object GraphTables {
 
-  /** `cleanup` unpersists the two internal materializations (the node map
-    * and the endpoint-resolution join) — call once the downstream table
-    * checkpoints exist. Safe at any point: they are eager PERSISTS with
-    * intact lineage, so a late consumer recomputes instead of failing. */
   case class Materialized(
       nodes: Dataset[NodeRow],
       edges: Dataset[EdgeRow],
       properties: Dataset[PropertyRow],
       triples: DataFrame, // (doc_id, subj, pred, obj) distinct, canonical
-      droppedEdges: DataFrame, // (doc_id, chunk_id, source, target, relationship)
-      cleanup: () => Unit)
+      droppedEdges: DataFrame) // (doc_id, chunk_id, source, target, relationship)
 
   /** Provenance struct incl. visual origin (reference MetadataVisual,
     * persistence/metadata.py:10-22): mentions sourced from a table/figure
@@ -84,19 +79,14 @@ object GraphTables {
         s"${prefix}_cd", s"${prefix}_cc", s"${prefix}_cn", s"${prefix}_ccn", s"${prefix}_ccan")
   }
 
+  /** The three internal materializations (the node map, the
+    * endpoint-resolution join and the node-resolved edges) land in the
+    * current [[Scope]]: close it once the downstream table checkpoints
+    * exist. Safe at any point: they are PERSISTS with intact lineage, so a
+    * late consumer recomputes instead of failing. */
   def build(logs: Dataset[ExtractionLog], mapping: DataFrame): Materialized = {
     val spark = logs.sparkSession
     import spark.implicits._
-
-    def timed[T](what: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      spark.sparkContext.setJobDescription(s"graft-mat:$what")
-      val out = body
-      spark.sparkContext.setJobDescription(null)
-      if (sys.env.contains("GRAFT_STAGE_TIMING"))
-        System.err.println(f"[mat-timing] $what%-12s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      out
-    }
 
     // ---- node mentions → nodes ---------------------------------------
     val mentions = logs
@@ -141,7 +131,7 @@ object GraphTables {
     // materialized once: consumed as the nodes table AND as the endpoint
     // resolution map for edges/properties. Independent of the edge-mention
     // resolution below — the two materializations overlap (Par).
-    val nodesF = Par.fork(spark)(timed("nodes_map")(graft.core.Materialize.eager(nodesPlan)))
+    val nodesF = Par.fork(spark)(Scope.labeled(spark, "graft-mat:nodes_map")(Scope.persist(nodesPlan)))
 
     lazy val nodes = Par.await(nodesF)
     lazy val nodeKeys = nodes.select(col("doc_id").as("nk_doc"), col("canonical_norm").as("nk_name"),
@@ -157,7 +147,7 @@ object GraphTables {
         lower(trim(col("e.source"))).as("src_norm"), lower(trim(col("e.target"))).as("dst_norm"))
 
     // materialized once: dropped/triples/edges all branch from this join
-    val resolved = timed("edge_resolve")(graft.core.Materialize.eager(resolveNames(
+    val resolved = Scope.labeled(spark, "graft-mat:edge_resolve")(Scope.persist(resolveNames(
         resolveNames(edgeMentions, mapping, "src_norm", "s"), mapping, "dst_norm", "d")
       .withColumnRenamed("s_canon_norm", "src_canon_norm")
       .withColumnRenamed("s_canon", "src_canon")
@@ -197,11 +187,11 @@ object GraphTables {
     // first one to arrive populates the cache (block-level locking dedups
     // the concurrent computation). Column-pruned to what the two
     // consumers and metaStruct read.
-    val (withIds, withIdsRdd) = graft.core.Materialize.stageCutLazyHandle(withBoth
+    val withIds = Scope.cut(withBoth
       .filter(col("frm_id").isNotNull && col("to_id").isNotNull)
       .select(col("doc_id"), col("chunk_id"), col("media_ref"), col("visual_kind"),
         col("relationship"), col("src_canon"), col("dst_canon"),
-        col("frm_id"), col("to_id")))
+        col("frm_id"), col("to_id")), lazily = true).df
     val droppedEdges = mappingMissDropped.unionByName(
       withBoth.filter(col("frm_id").isNull || col("to_id").isNull)
         .select(col("doc_id"), col("chunk_id"), col("source"), col("target"), col("relationship")))
@@ -257,8 +247,6 @@ object GraphTables {
       edges.as[EdgeRow],
       properties.as[PropertyRow],
       triples,
-      droppedEdges,
-      () => { nodes.unpersist(blocking = false); resolved.unpersist(blocking = false)
-        withIdsRdd.unpersist(blocking = false) })
+      droppedEdges)
   }
 }

@@ -1,7 +1,8 @@
 package graft.ops
 
+import graft.core.Scope
 import graft.functions.TextFns
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.functions._
 
 /** Deduplication family for large-scale training-data pipelines.
@@ -76,18 +77,17 @@ object Dedup {
     * empty docs carry a single ''-shingle — not a 0/0 null that would
     * silently drop the pair. */
   /** NOTE: constructing the returned DataFrame is EAGER (the candidate
-    * stage materializes at stageCut time) — by design, since both caches
+    * stage materializes at cut time) — by design, since both caches
     * below have two consumers each; plan-only callers (explain dumps)
     * should prefer the capped ngramJaccard path or accept the compute.
-    * The cleanup thunk frees both caches; lineage is kept, so a
-    * post-cleanup consumer recomputes instead of failing. */
-  private def verifyJaccardHandle(cands0: DataFrame, sets: DataFrame,
-                                  threshold: Double): (DataFrame, () => Unit) = {
+    * Both caches land in the current scope; lineage is kept, so a
+    * post-close consumer recomputes instead of failing. */
+  private def verifyJaccard(cands0: DataFrame, sets: DataFrame,
+                            threshold: Double): DataFrame = {
     // materialize the (slim) candidate pairs once: they feed the touched-id
     // projection and the verify join — recomputing them would re-run the
     // whole candidate-generation subtree per consumer
-    val (cands, candsRdd) = graft.core.Materialize.stageCutHandle(
-      cands0.select("ida", "idb"))
+    val cands = Scope.cut(cands0.select("ida", "idb")).df
     val touched = cands.select(col("ida").as("id"))
       .union(cands.select(col("idb").as("id"))).distinct()
     // verification working set: shingle sets for candidate-TOUCHED docs
@@ -95,8 +95,7 @@ object Dedup {
     // side), cached so the ida- and idb-side joins below don't each
     // re-shingle the full corpus. Bounded by the candidate volume, the
     // same working set any exact verification must hold.
-    val (tsets, tsetsRdd) = graft.core.Materialize.stageCutHandle(
-      sets.join(touched, Seq("id"), "left_semi"))
+    val tsets = Scope.cut(sets.join(touched, Seq("id"), "left_semi")).df
     // LOSSLESS size prefilter before the heavy array join: inter <=
     // min(na, nb) and union >= max(na, nb), so J >= t forces
     // min(na, nb) >= t * max(na, nb). Candidate pairs are generated from
@@ -116,16 +115,12 @@ object Dedup {
     val exact = when(size(col("sha")) === 0 && size(col("shb")) === 0, lit(1.0))
       .otherwise(inter.cast("double") /
         (size(col("sha")) + size(col("shb")) - inter))
-    val out = pruned
+    pruned
       .join(tsets.select(col("id").as("ida"), col("sh").as("sha")), Seq("ida"))
       .join(tsets.select(col("id").as("idb"), col("sh").as("shb")), Seq("idb"))
       .withColumn("j", exact)
       .filter(col("j") >= threshold)
       .select(col("ida"), col("idb"), round(col("j"), 4).as("jaccard"))
-    (out, () => {
-      candsRdd.unpersist(blocking = false)
-      tsetsRdd.unpersist(blocking = false)
-    })
   }
 
   /** Exact n-gram (word k-shingle) Jaccard near-dup pairs >= threshold.
@@ -149,48 +144,40 @@ object Dedup {
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         k: Int = 3, threshold: Double = 0.8,
                         maxShingleDf: Long = DefaultMaxShingleDf): DataFrame =
-    // fire-and-forget callers discard the cleanup thunk, so this wrapper
-    // must not pin a corpus-TOKEN-sized cache for the session lifetime:
-    // it trades the exploded-stream cache for re-shingling (3 scans) and
-    // pins only the bounded working sets (dup groups <= cap members each,
-    // per-doc features O(#docs)). Latency-sensitive callers that can free
-    // eagerly use [[ngramJaccardPairsHandle]], which keeps the
-    // single-shingle-pass cache.
+    // callers outside a scope cannot free, so this entry must not pin a
+    // corpus-TOKEN-sized cache for the session lifetime: it trades the
+    // exploded-stream cache for re-shingling (3 scans) and pins only the
+    // bounded working sets (dup groups <= cap members each, per-doc
+    // features O(#docs)). Latency-sensitive callers that can free eagerly
+    // use [[ngramJaccardPairsHandle]], which keeps the single-shingle-pass
+    // cache.
     ngramJaccardImpl(df, idCol, textCol, k, threshold, maxShingleDf,
-      cacheExploded = false)._1
+      cacheExploded = false)
 
-  /** [[ngramJaccardPairs]] plus a cleanup thunk for long-lived sessions:
-    * frees the working-set caches (candidate pairs + touched shingle sets
-    * on the uncapped path; the exploded stream + hot-shingle table on the
-    * capped path) once
-    * the caller has consumed the result. Without it each invocation pins
-    * its working set for the session's lifetime; lineage is kept, so a
-    * post-cleanup consumer recomputes instead of failing. */
+  /** [[ngramJaccardPairs]] with the single-shingle-pass cache, in its own
+    * scope: the thunk frees the working-set caches (candidate pairs +
+    * touched shingle sets on the uncapped path; the exploded stream + hot
+    * table on the capped path) once the caller has consumed the result. */
   def ngramJaccardPairsHandle(df: DataFrame, idCol: String, textCol: String,
                               k: Int = 3, threshold: Double = 0.8,
                               maxShingleDf: Long = DefaultMaxShingleDf): (DataFrame, () => Unit) =
-    ngramJaccardImpl(df, idCol, textCol, k, threshold, maxShingleDf,
-      cacheExploded = true)
+    Scope.run(ngramJaccardImpl(df, idCol, textCol, k, threshold, maxShingleDf, cacheExploded = true))
 
   /** `cacheExploded = true`: cache the exploded (id, shingle) stream so
     * the corpus is shingled exactly once (fastest; corpus-token-sized
-    * cache until the handle's cleanup runs). `false`: never materialize
+    * cache until the scope closes). `false`: never materialize
     * anything corpus-token-sized — the shingle scan runs once per
     * consumer (3×), and only the bounded dup-group / per-doc-feature
     * tables are cached (the right trade for callers that cannot free). */
   private def ngramJaccardImpl(df: DataFrame, idCol: String, textCol: String,
                                k: Int, threshold: Double, maxShingleDf: Long,
-                               cacheExploded: Boolean): (DataFrame, () => Unit) = {
+                               cacheExploded: Boolean): DataFrame = {
     val sets = shingleSets(df, idCol, textCol, k)
     val lazyEx = sets.select(col("id"), explode(col("sh")).as("g"))
     if (maxShingleDf > 0) {
       // the capped path reads the exploded (id, g) stream THREE times (hot
       // shingle counts, dup-shingle groups, per-doc features)
-      val (ex, exFree): (DataFrame, () => Unit) =
-        if (cacheExploded) {
-          val (d, r) = graft.core.Materialize.stageCutHandle(lazyEx)
-          (d, () => r.unpersist(blocking = false))
-        } else (lazyEx, () => ())
+      val ex = if (cacheExploded) Scope.cut(lazyEx).df else lazyEx
       // Capped path: candidate generation AND exact verification without
       // ever shuffling a full shingle array. Shared shingles split by the
       // global hotness of the shingle (df > cap), and the two halves of
@@ -212,22 +199,16 @@ object Dedup {
       // size(ids) after collecting would still accumulate a boilerplate
       // shingle's entire posting list (millions of ids at corpus scale)
       // in one aggregation buffer before discarding it.
-      // with the exploded stream uncached, stage-cut the (tiny, O(#hot
-      // shingles)) hot table itself: it feeds BOTH the grouped and the
-      // docFeats stage-cuts, and leaving it lazy makes each of them
-      // recompute the aggregation — a fourth full-corpus shingle scan
-      // ALWAYS stage-cut the (tiny, O(#hot shingles)) hot table: its two
-      // consumers sit in DIFFERENT jobs (the `grouped` stage cut's
-      // anti-join broadcast and the final job's left-join broadcast), so
-      // without a cut the full-corpus hot aggregation runs once per
-      // broadcast — exchange reuse never applies across jobs. One tiny
-      // barrier buys back a full exploded-stream aggregation.
-      val hot0 = ex.groupBy("g").agg(count(lit(1)).as("df_g"))
-        .filter(col("df_g") > maxShingleDf).select("g")
-      val (hot, hotFree): (DataFrame, () => Unit) = {
-        val (d, r) = graft.core.Materialize.stageCutHandle(hot0)
-        (d, () => r.unpersist(blocking = false))
-      }
+      //
+      // ALWAYS cut the (tiny, O(#hot shingles)) hot table: it feeds two
+      // differently-projected broadcasts — the anti-join under the lazy
+      // `grouped` below and the left join under `docFeats` (its own cut,
+      // hence its own job, when the exploded stream is uncached). No
+      // exchange reuse dedups them, so without a cut the full-corpus hot
+      // aggregation runs once per consumer. One tiny barrier buys back a
+      // full exploded-stream aggregation.
+      val hot = Scope.cut(ex.groupBy("g").agg(count(lit(1)).as("df_g"))
+        .filter(col("df_g") > maxShingleDf).select("g")).df
       // dup-shingle working set (groups of 2..cap docs): LAZY — its two
       // consumers (the l/r posexplode sides of the pair join) sit in the
       // SAME job, so AQE stage reuse dedups the aggregation exchange under
@@ -235,9 +216,8 @@ object Dedup {
       // bounded by the cap. The r5 stage cut here paid a barrier plus a
       // cache copy of every ids array to save that duplicate final merge —
       // measured at sf0.1 (QTime min of 5): cut 4.45 s, lazy 2.05 s, rows
-      // identical, shuffle 38→32 MiB, jobs 16→13. (Contrast `hot` below,
-      // whose consumers are in DIFFERENT jobs — exchange reuse never
-      // applies across jobs, so its cut stays.) Pairs expand through a
+      // identical, shuffle 38→32 MiB, jobs 16→13. (Contrast `hot` above,
+      // whose consumers are in DIFFERENT jobs.) Pairs expand through a
       // posexplode self-join on (group, i < j) — pure codegen, and
       // position comparison works for any id type
       val grouped =
@@ -260,12 +240,7 @@ object Dedup {
         .groupBy("id")
         .agg(count(lit(1)).as("n"),
           collect_set(when(col("is_hot"), col("g"))).as("hsh"))
-      val (docFeats, docFeatsFree): (DataFrame, () => Unit) =
-        if (cacheExploded) (docFeats0, () => ())
-        else {
-          val (d, r) = graft.core.Materialize.stageCutHandle(docFeats0)
-          (d, () => r.unpersist(blocking = false))
-        }
+      val docFeats = if (cacheExploded) docFeats0 else Scope.cut(docFeats0).df
       // lossless size prune before the hot-set join: inter <= min(na, nb)
       // and union >= max(na, nb), so J >= t forces min >= t * max
       val withFeats = pairRare
@@ -277,15 +252,10 @@ object Dedup {
           lit(threshold) * greatest(col("na"), col("nb")).cast("double"))
       val inter = (col("ir") +
         size(array_intersect(col("hsha"), col("hshb")))).cast("double")
-      val out = withFeats
+      withFeats
         .withColumn("j", inter / (col("na") + col("nb") - inter))
         .filter(col("j") >= threshold)
         .select(col("ida"), col("idb"), round(col("j"), 4).as("jaccard"))
-      (out, () => {
-        docFeatsFree()
-        hotFree()
-        exFree()
-      })
     } else {
       // uncapped (oracle-parity mode): group sizes are unbounded, so a
       // collect_set could blow a single task's memory — keep the blocked
@@ -294,7 +264,7 @@ object Dedup {
       val b = lazyEx.select(col("g").as("g2"), col("id").as("idb"))
       val cands = a.join(b, col("g") === col("g2") && col("ida") < col("idb"))
         .select("ida", "idb").distinct()
-      verifyJaccardHandle(cands, sets, threshold)
+      verifyJaccard(cands, sets, threshold)
     }
   }
 
@@ -303,14 +273,7 @@ object Dedup {
     * equi-join → exact verification restricted to candidates. */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       k: Int = 3, numPerm: Int = 16, bands: Int = 4,
-                      threshold: Double = 0.8): DataFrame =
-    minhashLshPairsHandle(df, idCol, textCol, k, numPerm, bands, threshold)._1
-
-  /** [[minhashLshPairs]] plus a cleanup thunk freeing the verification
-    * working-set caches (same contract as [[ngramJaccardPairsHandle]]). */
-  def minhashLshPairsHandle(df: DataFrame, idCol: String, textCol: String,
-                            k: Int = 3, numPerm: Int = 16, bands: Int = 4,
-                            threshold: Double = 0.8): (DataFrame, () => Unit) = {
+                      threshold: Double = 0.8): DataFrame = {
     val rows = numPerm / bands
     val sig = df.select(col(idCol).as("id"),
       minhashUdf(col(textCol), lit(k), lit(numPerm)).as("sig"))
@@ -324,7 +287,7 @@ object Dedup {
     val r = withBands.select(col("band").as("band2"), col("bh").as("bh2"), col("id").as("idb"))
     val cands = l.join(r, col("band") === col("band2") && col("bh") === col("bh2") && col("ida") < col("idb"))
       .select("ida", "idb").distinct()
-    verifyJaccardHandle(cands, shingleSets(df, idCol, textCol, k), threshold)
+    verifyJaccard(cands, shingleSets(df, idCol, textCol, k), threshold)
   }
 
   /** SimHash near-dup pairs: 64-bit simhash split into `64/bandBits` bands
@@ -384,18 +347,7 @@ object Dedup {
     * ([[simhashPairs]]'s 16-bit default) is the near-duplicate detector
     * for ham<=3 / J>=0.95 territory. This verified variant is audited
     * recall 1.0 vs the exact pair set (OracleCheck + the OpsSpec
-    * exact-set test). */
-  def simhashVerifiedPairs(df: DataFrame, idCol: String, textCol: String,
-                           k: Int = 3, threshold: Double = 0.8,
-                           maxHamming: Int = 15, bandBits: Int = 4): DataFrame =
-    simhashVerifiedPairsHandle(df, idCol, textCol, k, threshold, maxHamming, bandBits)._1
-
-  /** Valve-trip counter — spec observability only (OpsSpec asserts the
-    * valve fires on a hot-bucket corpus and stays silent on normal data). */
-  @volatile private[graft] var simhashValveTrips: Long = 0L
-
-  /** [[simhashVerifiedPairs]] plus a cleanup thunk freeing the verification
-    * working-set caches (same contract as [[ngramJaccardPairsHandle]]).
+    * exact-set test).
     *
     * '''Candidate-volume valve''': the wide net (4-bit bands) buckets
     * ~n/16 docs per band value on a homogeneous corpus, so co-bucketed
@@ -409,11 +361,10 @@ object Dedup {
     * quadratic join. The default bound caps the candidate join at a size
     * one stage handles comfortably; verify-scale corpora never trip it,
     * so the oracle bridge keeps its exact wide-net semantics there. */
-  def simhashVerifiedPairsHandle(df: DataFrame, idCol: String, textCol: String,
-                                 k: Int = 3, threshold: Double = 0.8,
-                                 maxHamming: Int = 15, bandBits: Int = 4,
-                                 maxCandidates: Long = 100000000L)
-      : (DataFrame, () => Unit) = {
+  def simhashVerifiedPairs(df: DataFrame, idCol: String, textCol: String,
+                           k: Int = 3, threshold: Double = 0.8,
+                           maxHamming: Int = 15, bandBits: Int = 4,
+                           maxCandidates: Long = 100000000L): DataFrame = {
     // validate UNCONDITIONALLY, before the probe: otherwise a bad banding
     // config on a hot corpus silently succeeds through the minhash
     // fallback while the same call on a sparse corpus throws — parameter
@@ -426,20 +377,12 @@ object Dedup {
     // signatures computed ONCE and stage-cut: the valve probe and the
     // non-tripped pair generation both read them (recomputing the
     // tokenize+FNV fold per consumer would double the corpus scan cost)
-    val (sigs, sigsRdd) = graft.core.Materialize.stageCutHandle(
-      df.select(col(idCol).as("id"), simhashUdf(col(textCol)).as("sig")))
-    // double, not long: the probe is a heuristic and Σc² on a pathological
-    // corpus can exceed Long — overflow must not wrap into "small"
-    val vol = sigs
+    val sigs = Scope.cut(
+      df.select(col(idCol).as("id"), simhashUdf(col(textCol)).as("sig"))).df
+    val vol = candidateVolume(sigs
       .select(explode(expr(s"transform(sequence(0, ${bands - 1}), " +
         s"b -> struct(b as band, shiftright(sig, b*$bandBits) & ${mask}L as bv))")).as("bb"))
-      .groupBy(col("bb.band"), col("bb.bv")).agg(count(lit(1)).as("c"))
-      .agg(sum(col("c").cast("double") * (col("c") - 1).cast("double") / 2))
-      .head().getAs[Any](0) match {
-        case null => 0.0
-        case d: java.lang.Double => d.doubleValue()
-        case other => other.toString.toDouble
-      }
+      .groupBy(col("bb.band"), col("bb.bv")))
     if (vol > maxCandidates.toDouble) {
       simhashValveTrips += 1
       System.err.println(f"[graft] WARNING: simhash wide-net candidate volume ~$vol%.3g " +
@@ -447,14 +390,26 @@ object Dedup {
         "to minhash LSH (same exact-Jaccard verification; banding recall audited by " +
         "DedupSpec/OracleCheck). The wide net is an oracle bridge for verify-scale " +
         "corpora, not a production detector -- see simhashPairs for the linear path.")
-      sigsRdd.unpersist(blocking = false)
-      minhashLshPairsHandle(df, idCol, textCol, k, threshold = threshold)
-    } else {
-      val (res, free) = verifyJaccardHandle(
-        simhashPairsFromSigs(sigs, maxHamming, bandBits).select("ida", "idb"),
-        shingleSets(df, idCol, textCol, k), threshold)
-      (res, () => { free(); sigsRdd.unpersist(blocking = false) })
-    }
+      Scope.free(sigs)
+      minhashLshPairs(df, idCol, textCol, k, threshold = threshold)
+    } else verifyJaccard(
+      simhashPairsFromSigs(sigs, maxHamming, bandBits).select("ida", "idb"),
+      shingleSets(df, idCol, textCol, k), threshold)
+  }
+
+  /** Valve-trip counter — spec observability only (OpsSpec asserts the
+    * valve fires on a hot-bucket corpus and stays silent on normal data). */
+  @volatile private[graft] var simhashValveTrips: Long = 0L
+
+  /** The candidate-volume probe both valves share: Σ c·(c−1)/2 over the
+    * group sizes c of `groups` — one map-side-combined aggregation. Double,
+    * not long: the probe is a heuristic and Σc² on a pathological corpus
+    * can exceed Long — overflow must not wrap into "small". */
+  private def candidateVolume(groups: RelationalGroupedDataset): Double = {
+    val r = groups.agg(count(lit(1)).as("c"))
+      .agg(sum(col("c").cast("double") * (col("c") - 1).cast("double") / 2))
+      .head()
+    if (r.isNullAt(0)) 0.0 else r.getDouble(0)
   }
 
   /** Near-dup **clustering with survivor selection** — what a training
@@ -467,46 +422,31 @@ object Dedup {
     * diameter, which near-dup transitivity keeps shallow.
     * Output: (id, group, keep). Singleton docs keep themselves. */
   def dedupClusters(df: DataFrame, idCol: String, pairs: DataFrame,
-                    bigStar: Boolean = false): DataFrame =
-    dedupClustersHandle(df, idCol, pairs, bigStar)._1
-
-  /** [[dedupClusters]] plus a cleanup thunk for long-lived sessions: the
-    * expensive pair-table cache is ALWAYS freed eagerly here (once CC has
-    * converged the label cache carries everything the output plan reads;
-    * kept lineage means a post-unpersist block loss recomputes instead of
-    * failing), and the thunk frees the remaining small label cache once
-    * the caller has consumed/persisted the result — without it, repeated
-    * invocations in one session would pin one label table each. */
-  /** `bigStar = true` routes component formation through the large-star/
-    * small-star contraction ([[graft.link.ConnectedComponents.runBigStar]])
-    * instead of min-label propagation — same labels (min member), round
-    * count O(log² n) instead of component diameter, for pair graphs whose
-    * transitive chains are not bounded by construction. */
-  def dedupClustersHandle(df: DataFrame, idCol: String, pairs: DataFrame,
-                          bigStar: Boolean = false): (DataFrame, () => Unit) = {
+                    bigStar: Boolean = false): DataFrame = {
     import graft.link.ConnectedComponents
     // materialize the pair stage ONCE (it is typically the output of an
     // expensive LSH pipeline) so CC iterations never recompute it
-    val (p, pRdd) = graft.core.Materialize.stageCutHandle(
+    val p = Scope.cut(
       pairs.select(col("ida").cast("string").as("a"),
-        col("idb").cast("string").as("b")))
+        col("idb").cast("string").as("b"))).df
     // iterate only over vertices that occur in a pair — the near-dup graph
     // is a vanishing fraction of the corpus, so the label-propagation
     // rounds never shuffle the full id set
     val touched = p.select(col("a").as("v")).union(p.select(col("b").as("v"))).distinct()
-    val cc = if (bigStar) ConnectedComponents.runBigStarHandle(_, _, 40)
-             else ConnectedComponents.runHandle(_, _, 25)
-    val (comp, compRdd) = cc(
+    val cc = if (bigStar) ConnectedComponents.runBigStar(_, _, 40)
+             else ConnectedComponents.run(_, _, 25)
+    val comp = cc(
       touched.select(lit("g").as("key"), col("v")),
       p.select(lit("g").as("key"), col("a"), col("b")))
-    pRdd.unpersist(blocking = false)
+    // once CC has converged the label cache carries everything the output
+    // plan reads; kept lineage means a block loss recomputes, never fails
+    Scope.free(p)
     // component label = lexicographic min member (min-label fixpoint), so
     // keep == (id == group) — no window shuffle; singletons keep themselves
-    val out = df.select(col(idCol).cast("string").as("id"))
+    df.select(col(idCol).cast("string").as("id"))
       .join(comp.select(col("v").as("id"), col("component")), Seq("id"), "left")
       .withColumn("group", coalesce(col("component"), col("id")))
       .select(col("id"), col("group"), (col("id") === col("group")).as("keep"))
-    (out, () => compRdd.unpersist(blocking = false))
   }
 
   /** Embedding-cosine near-dup pairs via multi-table random-hyperplane LSH
@@ -687,11 +627,11 @@ object Dedup {
                            centroids: Array[Array[Float]],
                            threshold: Double = 0.95,
                            maxCandidates: Long = 100000000L): DataFrame = {
-    val (assigned, aRdd) = graft.core.Materialize.stageCutHandle(
+    val assigned = Scope.cut(
       Similarity.assignClusters(
-        df.select(col(idCol).as("id"), col(vecCol).as("v")), "v", centroids))
+        df.select(col(idCol).as("id"), col(vecCol).as("v")), "v", centroids)).df
     val out = guardedPairsFromAssigned(assigned, threshold, maxCandidates)
-    aRdd.unpersist(blocking = false) // lineage kept; consumers recompute
+    Scope.free(assigned) // lineage kept; consumers recompute
     out
   }
 
@@ -711,13 +651,7 @@ object Dedup {
     * Verification is the same exact unrounded-cosine filter either way. */
   private def guardedPairsFromAssigned(assigned: DataFrame, threshold: Double,
                                        maxCandidates: Long): DataFrame = {
-    val vol = assigned.groupBy(col("cluster")).agg(count(lit(1)).as("c"))
-      .agg(sum(col("c").cast("double") * (col("c") - 1).cast("double") / 2))
-      .head().getAs[Any](0) match {
-        case null => 0.0
-        case d: java.lang.Double => d.doubleValue()
-        case other => other.toString.toDouble
-      }
+    val vol = candidateVolume(assigned.groupBy(col("cluster")))
     if (vol <= maxCandidates.toDouble) pairsFromAssigned(assigned, threshold)
     else {
       semanticValveTrips += 1
@@ -768,34 +702,28 @@ object Dedup {
     * Callers that need oracle-reproducible clustering pass explicit
     * `centroids` (e.g. the first-k-ids seed set the q_semantic_dedup
     * entry uses); production passes None and trains. The materialized
-    * assignment stays cached for the session (slim id+cluster+vec rows);
-    * long-lived sessions free it via [[semanticDedupHandle]]. */
+    * assignment and component caches are registered with the current
+    * [[graft.core.Scope]] (slim id+cluster+vec rows); long-lived sessions
+    * run this in a `Scope.run` and close it once the result is consumed.
+    * `maxCandidates` bounds the within-cluster candidate volume (see
+    * [[semanticClusterPairs]]). */
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
                     centroids: Option[Array[Array[Float]]] = None,
                     threshold: Double = 0.95, nClusters: Int = 16,
-                    seed: Long = 7L): DataFrame =
-    semanticDedupHandle(df, idCol, vecCol, centroids, threshold, nClusters, seed)._1
-
-  /** [[semanticDedup]] plus a cleanup thunk freeing the assignment and
-    * component caches once the caller has consumed the result. */
-  def semanticDedupHandle(df: DataFrame, idCol: String, vecCol: String,
-                          centroids: Option[Array[Array[Float]]] = None,
-                          threshold: Double = 0.95, nClusters: Int = 16,
-                          seed: Long = 7L,
-                          maxCandidates: Long = 100000000L): (DataFrame, () => Unit) = {
+                    seed: Long = 7L,
+                    maxCandidates: Long = 100000000L): DataFrame = {
     val cents = centroids.getOrElse(
       Similarity.trainCentroids(df.select(col(idCol), col(vecCol)),
         idCol, vecCol, nLists = nClusters, seed = seed))
-    val (assigned, aRdd) = graft.core.Materialize.stageCutHandle(
+    val assigned = Scope.cut(
       Similarity.assignClusters(
-        df.select(col(idCol).as("id"), col(vecCol).as("v")), "v", cents))
-    val (surv, freeCc) = dedupClustersHandle(
+        df.select(col(idCol).as("id"), col(vecCol).as("v")), "v", cents)).df
+    val surv = dedupClusters(
       assigned.select("id"), "id",
       guardedPairsFromAssigned(assigned, threshold, maxCandidates))
-    val out = assigned.select(col("id").cast("string").as("id"),
+    assigned.select(col("id").cast("string").as("id"),
         col("cluster").cast("long").as("cluster"))
       .join(surv, Seq("id"))
       .select("id", "cluster", "group", "keep")
-    (out, () => { freeCc(); aRdd.unpersist(blocking = false) })
   }
 }

@@ -39,10 +39,10 @@ object BuildPipeline {
       documents: DataFrame,
       searchIndex: DataFrame,
       droppedEdges: DataFrame,
-      // frees the no-workdir stage-cut caches; lineage stays intact, so a
-      // late consumer recomputes instead of failing. Call once the outputs
-      // are persisted (the streaming path calls it per micro-batch); a
-      // no-op in checkpointed mode.
+      // closes the build's cache scope (graft.core.Scope): frees every
+      // cache the build pinned; lineage stays intact, so a late consumer
+      // recomputes instead of failing. Call once the outputs are persisted
+      // (the streaming path calls it per micro-batch).
       cleanup: () => Unit = () => ())
 
   /** `docTags`: optional sidecar `(doc_id, tags: map<string,string>)` —
@@ -52,6 +52,13 @@ object BuildPipeline {
   def run(docs: Dataset[DocRow], extractor: SpanExtractor,
           checkpoints: Option[Checkpoints] = None,
           docTags: Option[DataFrame] = None): BuildResult = {
+    val (result, close) = Scope.run(build(docs, extractor, checkpoints, docTags))
+    result.copy(cleanup = close)
+  }
+
+  private def build(docs: Dataset[DocRow], extractor: SpanExtractor,
+                    checkpoints: Option[Checkpoints],
+                    docTags: Option[DataFrame]): BuildResult = {
     val spark = docs.sparkSession
     import spark.implicits._
 
@@ -86,12 +93,11 @@ object BuildPipeline {
     // stage keeps its lineage: a missed block silently RECOMPUTES the
     // partition from the (deterministic, seeded) upstream instead of
     // crashing or corrupting — block availability can cost time, never
-    // correctness.
-    // handles of the no-workdir stage cuts, so BuildResult.cleanup can free
-    // them deterministically once the caller has persisted the outputs —
-    // a long-running stream would otherwise accumulate ~9 cached RDDs per
-    // micro-batch until driver GC (or forever under GRAFT_NO_CLEANER)
-    val cuts = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
+    // correctness. Every cut lands in the build's scope, so
+    // BuildResult.cleanup frees them once the caller has persisted the
+    // outputs — a long-running stream would otherwise accumulate ~9 cached
+    // RDDs per micro-batch until driver GC (or forever under
+    // GRAFT_NO_CLEANER).
 
     // The input table has THREE consumers (chunk packing, visual-span
     // routing inside the logs stage, full-text assembly for doc_meta) —
@@ -101,32 +107,16 @@ object BuildPipeline {
     // the block manager's per-partition lock shares it with the others,
     // and a fully-resumed checkpointed build never materializes it at
     // all. Freed with the other stage cuts by BuildResult.cleanup.
-    val (docsCut, docsRdd) = Materialize.stageCutLazyHandle(docs.toDF())
-    cuts += docsRdd
-    val docsC = docsCut.as[DocRow]
-    def stage(name: String, shared: Boolean = true)(compute: => DataFrame): DataFrame = {
-      val t0 = System.nanoTime()
-      // label the materializing jobs (guide: setJobDescription is
-      // thread-local and AQE sub-jobs inherit it) so the UI and the
-      // shuffle probe attribute stages to pipeline stages by name
-      spark.sparkContext.setJobDescription(s"graft-stage:$name")
-      val out = checkpoints match {
-        case Some(cp) => cp.stage(name)(compute)
-        case None =>
-          if (shared) {
-            val (df, rdd) = Materialize.stageCutHandle(compute)
-            // stage() runs from concurrently forked branches — guard the
-            // plain ArrayBuffer (a lost append would leak the RDD past
-            // BuildResult.cleanup; a resize race could crash the build)
-            cuts.synchronized { cuts += rdd }
-            df
-          } else compute
+    val docsC = Scope.cut(docs.toDF(), lazily = true).df.as[DocRow]
+    // labelled so the UI and the shuffle probe attribute jobs to pipeline
+    // stages by name
+    def stage(name: String, shared: Boolean = true)(compute: => DataFrame): DataFrame =
+      Scope.labeled(spark, s"graft-stage:$name") {
+        checkpoints match {
+          case Some(cp) => cp.stage(name)(compute)
+          case None => if (shared) Scope.cut(compute).df else compute
+        }
       }
-      spark.sparkContext.setJobDescription(null)
-      if (sys.env.contains("GRAFT_STAGE_TIMING"))
-        System.err.println(f"[stage-timing] $name%-14s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      out
-    }
 
     // Overlap independent stages (graft.core.Par: concurrent job
     // submission — how independent DAG branches overlap on a real cluster).
@@ -160,18 +150,18 @@ object BuildPipeline {
     val logsT = logs.as[ExtractionLog]
 
     // --- linking + canonicalization (J4/J5/L7/L11) --------------------------
-    val link = Linker.canonicalMappingResult(logsT)
-    val mapping = stage("mapping")(link.mapping)
+    val (linked, freeLinker) = Scope.run(Linker.canonicalMapping(logsT))
+    val mapping = stage("mapping")(linked)
     // the mapping checkpoint exists now — free the linker's internal
     // materializations (names/resolved/ambiguous) so they stop competing
     // for executor memory with the materialize/community stages
-    link.cleanup()
+    freeLinker()
 
     // --- materialize level-0 graph (G1) -------------------------------------
     // GraphTables.build materializes the shared resolution lineage once;
     // the four table projections are then independent — materialize them
     // concurrently.
-    val mat = GraphTables.build(logsT, mapping)
+    val (mat, freeMat) = Scope.run(GraphTables.build(logsT, mapping))
     // nodes0 is ALREADY materialized inside GraphTables (endpoint-resolution
     // map) — a second eager checkpoint would copy it for nothing, so the
     // stage is lazy without a work dir (and persists normally with one).
@@ -185,10 +175,10 @@ object BuildPipeline {
 
     // --- community + document layers (G2/G3/G4) -----------------------------
     val docMeta = await(docMetaF)
-    val layer = Communities.build(
+    val (layer, freeLayer) = Scope.run(Communities.build(
       nodes0.as[NodeRow], edges0.as[EdgeRow], props0.as[PropertyRow],
       docMeta.select(col("doc_id"), col("keywords")),
-      docMeta.select(col("doc_id"), col("summary")))
+      docMeta.select(col("doc_id"), col("summary"))))
 
     // the three final tables derive from the SAME materialized membership —
     // independent of each other.
@@ -207,11 +197,7 @@ object BuildPipeline {
       checkpoints match {
         case Some(cp) => cp.stage(name)(base.unionByName(part))
         case None =>
-          spark.sparkContext.setJobDescription(s"graft-stage:$name-part")
-          val (p, rdd) = Materialize.stageCutHandle(part)
-          spark.sparkContext.setJobDescription(null)
-          cuts.synchronized { cuts += rdd }
-          base.unionByName(p)
+          base.unionByName(Scope.labeled(spark, s"graft-stage:$name-part")(Scope.cut(part).df))
       }
     val nodesF = fork(stage("nodes") {
       layer.nodesWithCommunity.unionByName(layer.communityNodes).unionByName(layer.docNodes)
@@ -224,8 +210,8 @@ object BuildPipeline {
     // all downstream tables are checkpointed (or derive from checkpoints) —
     // free the materialize/community internals; late lazy consumers
     // (dropped_edges without a work dir) recompute from the logs checkpoint
-    mat.cleanup()
-    layer.cleanup()
+    freeMat()
+    freeLayer()
 
     // --- documents registry (S6) ---------------------------------------------
     val documents = stage("documents", shared = false) {
@@ -249,8 +235,7 @@ object BuildPipeline {
     val searchIndex = stage("search_index", shared = false)(SearchIndex.build(nodes, edges, properties))
 
     BuildResult(chunks, logs, mapping, nodes, edges, properties, triples,
-      documents, searchIndex, dropped,
-      () => cuts.foreach(_.unpersist(blocking = false)))
+      documents, searchIndex, dropped)
   }
 
   /** Parity metric: precision / recall of distinct (doc_id, subj, pred, obj)

@@ -1,5 +1,6 @@
 package graft.query
 
+import graft.core.Scope
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -20,7 +21,7 @@ object Centrality {
     * Expressed as iterative DataFrame self-joins per BASELINE.json's
     * canonicalization idiom — no RDD, no GraphX:
     *  - the slim edge list, vertices and out-degrees are materialized once
-    *    (Materialize.stageCut: plan truncated, RDD lineage kept — cluster-
+    *    (Scope.cut: plan truncated, RDD lineage kept — cluster-
     *    safe, unlike localCheckpoint, whose blocks are unrecoverable when a
     *    remote fetch fails); the per-iteration work is one (frm)-keyed
     *    equi-join + one (to)-keyed partial-agg sum, both hash shuffles on
@@ -31,7 +32,7 @@ object Centrality {
     *    never a driver-side collect, so the whole iteration stays on the
     *    executors.
     *  - each iteration materializes its rank table and FREES the superseded
-    *    one (same discipline as ConnectedComponents.runHandle): plans stay
+    *    one (same discipline as ConnectedComponents.run): plans stay
     *    O(1) deep instead of O(iterations) — flat driver planning time —
     *    and a run pins exactly one rank-table cache at any moment, not one
     *    per iteration for the session's lifetime.
@@ -41,44 +42,35 @@ object Centrality {
     * sources fan out value-free. Returns (id, rank) with rank rounded to
     * 6 decimals; ranks over all vertices sum to 1.
     *
-    * The returned frame reads the final cached rank table, which stays
-    * persisted for the session; long-lived callers use [[pageRankHandle]]
-    * and free it once the result is consumed (lineage is kept, so a late
-    * consumer recomputes instead of failing). */
+    * The returned frame reads the final cached rank table, registered with
+    * the current [[graft.core.Scope]]; long-lived callers run this in a
+    * `Scope.run` and free it once the result is consumed (lineage is kept,
+    * so a late consumer recomputes instead of failing). */
   def pageRank(edges: DataFrame, frmCol: String = "frm", toCol: String = "to",
-               iterations: Int = 10, damping: Double = 0.85): DataFrame =
-    pageRankHandle(edges, frmCol, toCol, iterations, damping)._1
-
-  /** [[pageRank]] plus a cleanup thunk freeing the one cache the loop
-    * leaves behind (the final rank table). */
-  def pageRankHandle(edges: DataFrame, frmCol: String = "frm", toCol: String = "to",
-                     iterations: Int = 10, damping: Double = 0.85)
-      : (DataFrame, () => Unit) = {
+               iterations: Int = 10, damping: Double = 0.85): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
     val spark = edges.sparkSession
     // slim (src, dst) edge list, materialized ONCE — every iteration joins
     // against it; without the cut each iteration re-scans the edges input
-    val (e, eRdd) = graft.core.Materialize.stageCutHandle(
+    val e = Scope.cut(
       edges.select(col(frmCol).as("src"), col(toCol).as("dst"))
-        .filter(col("src").isNotNull && col("dst").isNotNull))
+        .filter(col("src").isNotNull && col("dst").isNotNull)).df
     val vertices = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id")))
       .distinct()
     // (id, deg) for every vertex; deg null => dangling
     val outDeg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-    val (withDeg, dRdd) = graft.core.Materialize.stageCutHandle(
-      vertices.join(outDeg, Seq("id"), "left"))
+    val withDeg = Scope.cut(vertices.join(outDeg, Seq("id"), "left")).df
     val n = withDeg.count()
     if (n == 0) {
-      eRdd.unpersist(blocking = false)
-      dRdd.unpersist(blocking = false)
-      return (spark.emptyDataFrame
+      Scope.free(e)
+      Scope.free(withDeg)
+      return spark.emptyDataFrame
         .withColumn("id", lit(null).cast("string"))
-        .withColumn("rank", lit(null).cast("double")), () => ())
+        .withColumn("rank", lit(null).cast("double"))
     }
-    var (ranks, rRdd) = graft.core.Materialize.stageCutHandle(
-      withDeg.select(col("id"), lit(1.0 / n).as("rank")))
+    var ranks = Scope.cut(withDeg.select(col("id"), lit(1.0 / n).as("rank"))).df
     val base = (1.0 - damping) / n
     for (_ <- 1 to iterations) {
       val cur = ranks.join(withDeg.select("id", "deg"), Seq("id"))
@@ -88,20 +80,18 @@ object Centrality {
         .join(e, cur("id") === e("src"))
         .select(col("dst").as("id"), (col("rank") / col("deg")).as("c"))
         .groupBy("id").agg(sum("c").as("inflow"))
-      val (cp, cpRdd) = graft.core.Materialize.stageCutHandle(
+      val cp = Scope.cut(
         withDeg.select("id")
           .join(contribs, Seq("id"), "left")
           .crossJoin(broadcast(dangling))
           .select(col("id"),
             (lit(base) + lit(damping) *
-              (coalesce(col("inflow"), lit(0.0)) + col("_dm") / n)).as("rank")))
-      rRdd.unpersist(blocking = false) // superseded; cp holds the data
+              (coalesce(col("inflow"), lit(0.0)) + col("_dm") / n)).as("rank"))).df
+      Scope.free(ranks) // superseded; cp holds the data
       ranks = cp
-      rRdd = cpRdd
     }
-    eRdd.unpersist(blocking = false)
-    dRdd.unpersist(blocking = false)
-    (ranks.select(col("id"), round(col("rank"), 6).as("rank")),
-      () => rRdd.unpersist(blocking = false))
+    Scope.free(e)
+    Scope.free(withDeg)
+    ranks.select(col("id"), round(col("rank"), 6).as("rank"))
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Scope
 import graft.functions.TextFns
 import graft.ops.{Dedup, Multimodal, Packing, Ranking, Similarity, TextAnalysis}
 import org.apache.spark.sql.functions._
@@ -13,6 +14,10 @@ class OpsSpec extends SparkSpec {
   lazy val docs = spark.read.parquet(s"$sf/documents.parquet").cache()
   lazy val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     .select(col("vec_id").as("id"), col("embedding").as("vec")).cache()
+  // near-identical docs: trips the simhash wide-net valve
+  lazy val hotDocs = (0 until 120).map(i =>
+    (i.toLong, "the same boilerplate sentence repeated across the corpus body " * 5 +
+      s"tail$i")).toDF("doc_id", "text")
 
   test("two empty documents pair at jaccard 1.0 (no 0/0 null drop)") {
     // empty docs band-collide in every band (all-MaxValue signatures); the
@@ -108,12 +113,10 @@ class OpsSpec extends SparkSpec {
     import spark.implicits._
     // 120 near-identical docs → every 4-bit band buckets them together:
     // candidate volume ~ 16 * C(120,2) ≈ 114k, far past a 1k valve
-    val hot = (0 until 120).map(i =>
-      (i.toLong, "the same boilerplate sentence repeated across the corpus body " * 5 +
-        s"tail$i")).toDF("doc_id", "text")
+    val hot = hotDocs
     val before = Dedup.simhashValveTrips
-    val (tripped, freeT) = Dedup.simhashVerifiedPairsHandle(
-      hot, "doc_id", "text", k = 3, threshold = 0.8, maxCandidates = 1000L)
+    val (tripped, freeT) = Scope.run(Dedup.simhashVerifiedPairs(
+      hot, "doc_id", "text", k = 3, threshold = 0.8, maxCandidates = 1000L))
     val trippedPairs = tripped.select("ida", "idb").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     freeT()
@@ -126,8 +129,8 @@ class OpsSpec extends SparkSpec {
     // the default bound does NOT trip on the fixture corpus (oracle bridge
     // keeps its exact wide-net semantics at verify scale)
     val b2 = Dedup.simhashValveTrips
-    val (untripped, freeU) = Dedup.simhashVerifiedPairsHandle(
-      docs, "doc_id", "text", k = 3, threshold = 0.8)
+    val (untripped, freeU) = Scope.run(Dedup.simhashVerifiedPairs(
+      docs, "doc_id", "text", k = 3, threshold = 0.8))
     untripped.count()
     freeU()
     assert(Dedup.simhashValveTrips === b2, "default valve must stay silent at verify scale")
@@ -312,8 +315,8 @@ class OpsSpec extends SparkSpec {
       .withColumn("vec_id", col("vec_id") + lit(1000000L))
     val full = corpus.unionByName(planted)
     // production path: bounded-sample k-means centroids (no seed list)
-    val (ded, free) = Dedup.semanticDedupHandle(full, "vec_id", "embedding",
-      centroids = None, threshold = 0.95, nClusters = 8)
+    val (ded, free) = Scope.run(Dedup.semanticDedup(full, "vec_id", "embedding",
+      centroids = None, threshold = 0.95, nClusters = 8))
     val byId = ded.collect()
       .map(r => r.getAs[String]("id") ->
         ((r.getAs[String]("group"), r.getAs[Boolean]("keep")))).toMap
@@ -348,8 +351,8 @@ class OpsSpec extends SparkSpec {
     val hot = base.toDF("vec_id", "embedding")
     val seed = Array(Array.tabulate(64)(_ => 1.0f))
     val before = Dedup.semanticValveTrips
-    val (ded, free) = Dedup.semanticDedupHandle(hot, "vec_id", "embedding",
-      centroids = Some(seed), threshold = 0.999, maxCandidates = 1000L)
+    val (ded, free) = Scope.run(Dedup.semanticDedup(hot, "vec_id", "embedding",
+      centroids = Some(seed), threshold = 0.999, maxCandidates = 1000L))
     val byId = ded.collect()
       .map(r => r.getAs[String]("id") -> r.getAs[String]("group")).toMap
     free()
@@ -364,8 +367,8 @@ class OpsSpec extends SparkSpec {
     val corpus = spark.read.parquet(s"$sf/embeddings.parquet")
     val seeds = corpus.filter(col("vec_id") < 8).orderBy("vec_id")
       .select("embedding").collect().map(_.getAs[Seq[Float]](0).toArray)
-    val (quiet, freeQ) = Dedup.semanticDedupHandle(corpus, "vec_id", "embedding",
-      centroids = Some(seeds), threshold = 0.95)
+    val (quiet, freeQ) = Scope.run(Dedup.semanticDedup(corpus, "vec_id", "embedding",
+      centroids = Some(seeds), threshold = 0.95))
     quiet.count()
     freeQ()
     assert(Dedup.semanticValveTrips === b2, "default valve must stay silent at verify scale")
@@ -927,34 +930,105 @@ class OpsSpec extends SparkSpec {
     assert(n.getDouble(3) === 15.0, "NULL stratum keeps its median")
   }
 
+  /** Run `call` — which returns an operator's output plus the thunk that
+    * frees what it pinned — and check the teardown contract: once the
+    * thunk runs, getPersistentRDDs and the CacheManager are back to their
+    * pre-call state, and a consumer after close recomputes identical rows
+    * (lineage kept). `check` runs its own assertions on the output first. */
+  private def assertCleanTeardown(call: => (org.apache.spark.sql.DataFrame, () => Unit))(
+      check: org.apache.spark.sql.DataFrame => Unit = _ => ()): Unit = {
+    // materialize the fixtures' own caches before the snapshot
+    docs.count()
+    emb.count()
+    val preRdds = spark.sparkContext.getPersistentRDDs.keySet
+    val preCached = org.apache.spark.sql.CacheEntries.count(spark)
+    val (out, close) = call
+    val rows = out.collect().map(_.toString).sorted.toSeq
+    check(out)
+    close()
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- preRdds
+    assert(leaked.isEmpty, s"teardown must release every cache it pinned, leaked: $leaked")
+    assert(spark.sparkContext.getPersistentRDDs.keySet === preRdds)
+    assert(org.apache.spark.sql.CacheEntries.count(spark) === preCached)
+    close() // idempotent
+    assert(out.collect().map(_.toString).sorted.toSeq === rows,
+      "a consumer after close must recompute the same rows")
+  }
+
   test("curation funnel: monotone retention, contiguous packing, clean teardown") {
     import graft.ops.Curation
-    docs.count() // materialize the fixture's own cache before the snapshot
-    val preCaches = spark.sparkContext.getPersistentRDDs.keySet
-    val (packed, stats, cleanup) = Curation.curateHandle(docs, "doc_id", "text")
-    val st = stats.collect().map(r => r.getString(0) -> r.getLong(1))
-    val order = Seq("input", "lang_kept", "quality_kept", "exact_kept",
-      "neardup_kept", "train_split", "packed")
-    assert(st.map(_._1).toSeq === order)
-    val byName = st.toMap
-    // every gate only removes documents; packing preserves the train set
-    order.sliding(2).foreach { case Seq(a, b) =>
-      assert(byName(a) >= byName(b), s"$a -> $b grew")
+    var stats: org.apache.spark.sql.DataFrame = null
+    assertCleanTeardown {
+      val (p, st, cleanup) = Curation.curateHandle(docs, "doc_id", "text")
+      stats = st
+      (p, cleanup)
+    } { packed =>
+      val st = stats.collect().map(r => r.getString(0) -> r.getLong(1))
+      val order = Seq("input", "lang_kept", "quality_kept", "exact_kept",
+        "neardup_kept", "train_split", "packed")
+      assert(st.map(_._1).toSeq === order)
+      val byName = st.toMap
+      // every gate only removes documents; packing preserves the train set
+      order.sliding(2).foreach { case Seq(a, b) =>
+        assert(byName(a) >= byName(b), s"$a -> $b grew")
+      }
+      assert(byName("train_split") === byName("packed"))
+      assert(byName("packed") > 0)
+      // offsets are the exclusive prefix sum in id order: contiguous, gapless
+      val rows = packed.orderBy("id").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      rows.foldLeft(0L) { case (expectOff, (_, n, off, bin)) =>
+        assert(off === expectOff)
+        assert(bin === off / 2048)
+        off + n
+      }
     }
-    assert(byName("train_split") === byName("packed"))
-    assert(byName("packed") > 0)
-    // offsets are the exclusive prefix sum in id order: contiguous, gapless
-    val rows = packed.orderBy("id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    rows.foldLeft(0L) { case (expectOff, (_, n, off, bin)) =>
-      assert(off === expectOff)
-      assert(bin === off / 2048)
-      off + n
+  }
+
+  // every other operator that pins a cache, under the same contract
+  private def seeds = spark.read.parquet(s"$sf/embeddings.parquet")
+    .filter(col("vec_id") < 8).orderBy("vec_id")
+    .select("embedding").collect().map(_.getAs[Seq[Float]](0).toArray)
+  private def srcPairs = Dedup.minhashLshPairs(docs, "doc_id", "text")
+  Seq[(String, () => org.apache.spark.sql.DataFrame)](
+    "ngram capped" -> (() => Dedup.ngramJaccardPairs(docs, "doc_id", "text")),
+    "ngram uncapped" -> (() =>
+      Dedup.ngramJaccardPairs(docs, "doc_id", "text", maxShingleDf = 0L)),
+    "ngram capped, exploded-stream cache (nested scope)" -> (() =>
+      Dedup.ngramJaccardPairsHandle(docs, "doc_id", "text", maxShingleDf = 50L)._1),
+    "minhash" -> (() => Dedup.minhashLshPairs(docs, "doc_id", "text")),
+    "simhash-verified, untripped" -> (() => Dedup.simhashVerifiedPairs(docs, "doc_id", "text")),
+    "simhash-verified, tripped" -> (() =>
+      Dedup.simhashVerifiedPairs(hotDocs, "doc_id", "text", maxCandidates = 1000L)),
+    "dedupClusters, min-label" -> (() => Dedup.dedupClusters(docs, "doc_id", srcPairs)),
+    "dedupClusters, bigStar" -> (() =>
+      Dedup.dedupClusters(docs, "doc_id", srcPairs, bigStar = true)),
+    "semanticDedup" -> (() => Dedup.semanticDedup(spark.read.parquet(s"$sf/embeddings.parquet"),
+      "vec_id", "embedding", Some(seeds), threshold = 0.95)),
+    "naiveBayes" -> (() => graft.ops.Classifier.naiveBayes(docs, "doc_id", "text",
+      docs.filter(col("doc_id") % 2 === 0), "source", "text")),
+    "bigramPerplexity" -> (() => graft.ops.LangModel.bigramPerplexity(docs, "doc_id", "text",
+      docs.filter(col("source") === "src0"), "text")),
+    "pack" -> (() => Packing.pack(
+      docs.select(col("doc_id").as("id"), length(col("text")).cast("long").as("n")),
+      "id", "n", 4096L)),
+    // a cycle plus one dangling sink: every vertex has one in-edge, so the
+    // recomputed ranks sum the same terms in the same order
+    "pageRank" -> (() => graft.query.Centrality.pageRank(
+      ((0 until 8).map(i => (s"v$i", s"v${(i + 1) % 8}")) :+ (("v7", "sink")))
+        .toDF("frm", "to")))
+  ).foreach { case (name, op) =>
+    test(s"clean teardown: $name") {
+      assertCleanTeardown(Scope.run(op()))()
     }
-    cleanup()
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- preCaches
-    assert(leaked.isEmpty,
-      s"funnel teardown must release every cache it pinned, leaked: $leaked")
+  }
+
+  test("clean teardown: no-workdir BuildPipeline.run, then cleanup()") {
+    assertCleanTeardown {
+      val r = graft.pipeline.BuildPipeline.run(
+        graft.core.Corpus.docs(spark, 20), new graft.extract.DeterministicExtractor)
+      (r.triples, r.cleanup)
+    }()
   }
 
   test("char entropy: closed-form values, empty docs, uniform vs degenerate") {
