@@ -60,11 +60,11 @@ object ShuffleProbe {
       import spark.implicits._
       val chunksT = graft.build.Chunker.chunks(Corpus.docs(spark, nDocs))
       val ex = new DeterministicExtractor
-      val logs = graft.core.Scope.persist(
+      // eager cut: materialized before the listener attaches
+      val logs = graft.core.Scope.cut(
         graft.extract.Extract.withProperties(
           graft.extract.Extract.rawLogs(chunksT,
-            graft.build.Chunker.visualSpans(Corpus.docs(spark, nDocs)), ex), ex).toDF())
-      logs.count() // materialized before the listener attaches
+            graft.build.Chunker.visualSpans(Corpus.docs(spark, nDocs)), ex), ex).toDF()).df
       spark.sparkContext.addSparkListener(acc)
       val t0 = System.nanoTime()
       val (mapping, freeLinker) = graft.core.Scope.run(

@@ -49,7 +49,7 @@ object Communities {
   private def edgeIdUdf(a: Column, b: Column, d: Column): Column =
     Ids.idCol(lit("edge"), a, b, d)
 
-  /** The components and membership persists land in the current [[Scope]]. */
+  /** The components and membership cuts land in the current [[Scope]]. */
   def build(
       nodes: Dataset[NodeRow],
       edges: Dataset[EdgeRow],
@@ -59,9 +59,9 @@ object Communities {
   ): CommunityLayer = {
     val spark = nodes.sparkSession
 
-    // NOT checkpointed: `nodes` arrives materialized (GraphTables checkpoints
-    // it; the pipeline stage persists it), so this projection is free to
-    // recompute per consumer — a checkpoint here would only add a barrier.
+    // NOT cut: `nodes` arrives materialized (the nodes0 checkpoint, or
+    // GraphTables' nodes_map cut), so this projection is free to recompute
+    // per consumer — a cut here would only add a barrier.
     val n0 = nodes.toDF()
       .withColumn("doc_id", element_at(col("metadata"), 1).getField("document_id"))
 
@@ -70,9 +70,9 @@ object Communities {
     val edgePairs = edges.toDF().select(
       element_at(col("metadata"), 1).getField("document_id").as("key"),
       col("frm").as("a"), col("to").as("b"))
-    val comps = Scope.labeled(spark, "graft-comm:components")(Scope.persist(
+    val comps = Scope.labeled(spark, "graft-comm:components")(Scope.cut(
       ConnectedComponents.runPerKey(vertices, edgePairs)
-        .select(col("key").as("doc_id"), col("v").as("node_id"), col("component"))))
+        .select(col("key").as("doc_id"), col("v").as("node_id"), col("component"))).df)
 
     // Leiden-style refinement inside each component (components are
     // per-document entity graphs — small — so this is a local flatMapGroups,
@@ -102,9 +102,9 @@ object Communities {
       .select(col("doc_id"), col("sub_component"),
         commIdUdf(col("doc_id"), col("min_member")).as("community_id"))
 
-    val membership = Scope.labeled(spark, "graft-comm:membership")(Scope.persist(
+    val membership = Scope.labeled(spark, "graft-comm:membership")(Scope.cut(
       refined.join(commIds, Seq("doc_id", "sub_component"))
-        .select(col("doc_id"), col("node_id"), col("community_id"))))
+        .select(col("doc_id"), col("node_id"), col("community_id"))).df)
 
     // --- level-0 nodes annotated with their community ---------------------
     val nodesWithCommunity = n0

@@ -6,9 +6,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Owner of the caches a computation pins. Every cache made through
-  * [[Scope.cut]], [[Scope.persist]] or [[Scope.track]] while a scope is
-  * current — on the calling thread or on a [[Par.fork]] thread forked from
-  * it — is registered with that scope and freed when it closes. Outside any
+  * [[Scope.cut]] or [[Scope.track]] while a scope is current — on the
+  * calling thread or on a [[Par.fork]] thread forked from it — is
+  * registered with that scope and freed when it closes. Outside any
   * scope nothing is registered and no reference is held: the cache stays
   * pinned until the caller frees it or sweeps `getPersistentRDDs`.
   *
@@ -17,7 +17,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   * instead of failing on a missing block.
   */
 final class Scope private (private val parent: Scope) {
-  // persisted RDDs, persisted Datasets and child scopes; identity-keyed
+  // persisted RDDs and child scopes; identity-keyed
   private val held = java.util.Collections.newSetFromMap(
     new java.util.IdentityHashMap[AnyRef, java.lang.Boolean])
   private var closed = false
@@ -73,6 +73,16 @@ object Scope {
     (out, () => s.close())
   }
 
+  /** A [[run]] put off until its result is first needed. `get` runs `body`
+    * once, in a child of the scope current at that call, and every other
+    * caller (forked ones included) blocks until it is built; `free` closes
+    * that child, and is a no-op while `body` has not run. */
+  final class Deferred[T](body: => T) {
+    private var built: Option[(T, () => Unit)] = None
+    def get: T = synchronized(built.getOrElse { built = Some(run(body)); built.get })._1
+    def free(): Unit = synchronized(built).foreach(_._2())
+  }
+
   /** Run `body` with `s` as the current scope (null: none). */
   private[core] def within[T](s: Scope)(body: => T): T = {
     val outer = current.get
@@ -126,35 +136,16 @@ object Scope {
     }
   }
 
-  /** Dataset cache + count, returning the same (now cached) frame. Kept
-    * apart from [[cut]] because the plan is NOT cut: consumers plan over
-    * an InMemoryRelation, so swapping one for the other changes the
-    * downstream plans, their jobs and their shuffle bytes.
-    * count(), NOT foreachPartition: foreachPartition is a typed action that
-    * deserializes every InternalRow to an external Row (GenerateSafeProjection
-    * per row — jstack showed all workers blocked on its codegen lock, then
-    * paying object conversion for every wide metadata row). count() plans a
-    * codegen aggregate over the persisted scan and populates the cache as a
-    * side effect, no row conversion. */
-  def persist(df: DataFrame): DataFrame = {
-    val p = df.persist(CacheLevel)
-    hold(p)
-    p.count()
-    p
-  }
-
   /** Register an RDD the caller persisted itself. */
   def track[R <: RDD[_]](rdd: R): R = { hold(rdd); rdd }
 
-  /** Free one cache early: a [[cut]] frame's RDD, or a [[persist]]ed frame. */
-  def free(df: Dataset[_]): Unit = {
-    val x: AnyRef = df.queryExecution.logical match {
-      case l: LogicalRDD => l.rdd
-      case _ => df
-    }
-    var s = current.get
-    while (s != null) { s.drop(x); s = s.parent }
-    release(x)
+  /** Free one [[cut]] frame's cache early. */
+  def free(df: Dataset[_]): Unit = df.queryExecution.logical match {
+    case l: LogicalRDD =>
+      var s = current.get
+      while (s != null) { s.drop(l.rdd); s = s.parent }
+      release(l.rdd)
+    case p => throw new IllegalArgumentException(s"not a Scope.cut frame: ${p.nodeName}")
   }
 
   private def hold(x: AnyRef): Unit = {
@@ -165,7 +156,6 @@ object Scope {
   private def release(x: AnyRef): Unit = x match {
     case s: Scope => s.close()
     case r: RDD[_] => r.unpersist(blocking = false)
-    case d: Dataset[_] => d.unpersist(blocking = false)
   }
 
   /** Label the Spark jobs `body` submits (the job description is

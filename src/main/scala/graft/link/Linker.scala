@@ -233,7 +233,7 @@ object Linker {
   def canonicalMapping(logs: Dataset[ExtractionLog]): DataFrame = {
     val spark = logs.sparkSession
     import spark.implicits._
-    import graft.core.Scope.{labeled, persist}
+    import graft.core.Scope.{cut, labeled}
 
     // SLIM name table straight from the logs: the blocking join,
     // union-find, and resolution read only (doc_id, name_norm, display).
@@ -252,7 +252,7 @@ object Linker {
     // 505 -> 1406 MiB — the rollup's exchange was not reused across the
     // three differently-projected subtrees), so the one-barrier cut is
     // the cheaper trade at scale.
-    val names = labeled(spark, "graft-link:names")(persist(uniqueNamesSlim(logs)))
+    val names = labeled(spark, "graft-link:names")(cut(uniqueNamesSlim(logs)).df)
     // Dictionary encoding: a 64-bit xxhash64 id per name. Pair rows carry
     // 8-byte ids instead of name strings (matchedPairIds). A same-doc id
     // collision would merge two names; at ~2^-64 per same-doc name pair it
@@ -286,7 +286,7 @@ object Linker {
       .as[(String, Long, String, String)]
       .groupByKey(_._1)
     val pairRows = pairs.as[(String, Long, Long)].groupByKey(_._1)
-    val resolved = labeled(spark, "graft-link:resolved")(persist(nameRows.cogroup(pairRows) {
+    val resolved = labeled(spark, "graft-link:resolved")(cut(nameRows.cogroup(pairRows) {
       (doc: String, ns: Iterator[(String, Long, String, String)],
        ps: Iterator[(String, Long, Long)]) =>
         // union-find over 8-byte ids with path compression (union-by-min
@@ -324,7 +324,7 @@ object Linker {
             .map(r => (doc, r.name_norm, r.canonical_norm, r.canonical, r.candidates))
         }
       }
-      .toDF("doc_id", "name_norm", "canonical_norm", "canonical", "candidates")))
+      .toDF("doc_id", "name_norm", "canonical_norm", "canonical", "candidates")).df)
 
     // ---- late description recomputation, ambiguous documents only ------
     // Ambiguity is decided above without descs; only now do desc payloads
@@ -341,11 +341,12 @@ object Linker {
     // description text instead of all of it
     val logsAmbig = logs.toDF().join(ambigDocs, Seq("doc_id"), "left_semi")
       .as[graft.core.ExtractionLog]
-    val aggAmbig = persist(mentionAgg(logsAmbig))
+    def cutAmbig(df: DataFrame): DataFrame = labeled(spark, "graft-link:ambiguous")(cut(df).df)
+    val aggAmbig = cutAmbig(mentionAgg(logsAmbig))
     // full name table (descs/ne_descs/prop_descs) for ambiguous docs —
     // containment gathering scans ALL names of the doc, so this derives
     // from the doc-scoped semi join, not from the ambiguous names alone
-    val namesAmbig = persist(uniqueNamesFrom(aggAmbig))
+    val namesAmbig = cutAmbig(uniqueNamesFrom(aggAmbig))
 
     // A6 — candidate context gathered by SUBSTRING CONTAINMENT across the
     // doc's mention names (reference node_matcher.py:104-143: a candidate
@@ -369,7 +370,7 @@ object Linker {
     // candidates with containment-gathered context (falls back to empty
     // when nothing in the doc contains the candidate name); materialized
     // once — BOTH the doc-level default and the per-chunk overrides join it
-    val ambiguous = persist(resolved.filter(size(col("candidates")) > 1)
+    val ambiguous = cutAmbig(resolved.filter(size(col("candidates")) > 1)
       .select(col("doc_id"), col("name_norm"), explode(col("candidates")).as("c"))
       .select(col("doc_id"), col("name_norm"),
         col("c._1").as("cand_norm"), col("c._2").as("cand_display"))

@@ -82,7 +82,7 @@ object GraphTables {
   /** The three internal materializations (the node map, the
     * endpoint-resolution join and the node-resolved edges) land in the
     * current [[Scope]]: close it once the downstream table checkpoints
-    * exist. Safe at any point: they are PERSISTS with intact lineage, so a
+    * exist. Safe at any point: they are cuts with intact lineage, so a
     * late consumer recomputes instead of failing. */
   def build(logs: Dataset[ExtractionLog], mapping: DataFrame): Materialized = {
     val spark = logs.sparkSession
@@ -131,7 +131,7 @@ object GraphTables {
     // materialized once: consumed as the nodes table AND as the endpoint
     // resolution map for edges/properties. Independent of the edge-mention
     // resolution below — the two materializations overlap (Par).
-    val nodesF = Par.fork(spark)(Scope.labeled(spark, "graft-mat:nodes_map")(Scope.persist(nodesPlan)))
+    val nodesF = Par.fork(spark)(Scope.labeled(spark, "graft-mat:nodes_map")(Scope.cut(nodesPlan).df))
 
     lazy val nodes = Par.await(nodesF)
     lazy val nodeKeys = nodes.select(col("doc_id").as("nk_doc"), col("canonical_norm").as("nk_name"),
@@ -147,12 +147,12 @@ object GraphTables {
         lower(trim(col("e.source"))).as("src_norm"), lower(trim(col("e.target"))).as("dst_norm"))
 
     // materialized once: dropped/triples/edges all branch from this join
-    val resolved = Scope.labeled(spark, "graft-mat:edge_resolve")(Scope.persist(resolveNames(
+    val resolved = Scope.labeled(spark, "graft-mat:edge_resolve")(Scope.cut(resolveNames(
         resolveNames(edgeMentions, mapping, "src_norm", "s"), mapping, "dst_norm", "d")
       .withColumnRenamed("s_canon_norm", "src_canon_norm")
       .withColumnRenamed("s_canon", "src_canon")
       .withColumnRenamed("d_canon_norm", "dst_canon_norm")
-      .withColumnRenamed("d_canon", "dst_canon")))
+      .withColumnRenamed("d_canon", "dst_canon")).df)
 
     val mappingMissDropped = resolved
       .filter(col("src_canon_norm").isNull || col("dst_canon_norm").isNull)

@@ -149,33 +149,37 @@ object BuildPipeline {
     }
     val logsT = logs.as[ExtractionLog]
 
+    // The linker, materializer and community layers are each built once,
+    // in a child scope, when a stage thunk that consumes them computes: a
+    // resumed stage reads its checkpoint, so a full resume builds none.
+
     // --- linking + canonicalization (J4/J5/L7/L11) --------------------------
-    val (linked, freeLinker) = Scope.run(Linker.canonicalMapping(logsT))
-    val mapping = stage("mapping")(linked)
-    // the mapping checkpoint exists now — free the linker's internal
-    // materializations (names/resolved/ambiguous) so they stop competing
-    // for executor memory with the materialize/community stages
-    freeLinker()
+    val linker = new Scope.Deferred(Linker.canonicalMapping(logsT))
+    val mapping = stage("mapping")(linker.get)
+    // the mapping stage is materialized now — free the linker's internal
+    // cuts (names/resolved/ambiguous) so they stop competing for executor
+    // memory with the materialize/community stages
+    linker.free()
 
     // --- materialize level-0 graph (G1) -------------------------------------
     // GraphTables.build materializes the shared resolution lineage once;
     // the four table projections are then independent — materialize them
     // concurrently.
-    val (mat, freeMat) = Scope.run(GraphTables.build(logsT, mapping))
+    val mat = new Scope.Deferred(GraphTables.build(logsT, mapping))
     // nodes0 is ALREADY materialized inside GraphTables (endpoint-resolution
     // map) — a second eager checkpoint would copy it for nothing, so the
     // stage is lazy without a work dir (and persists normally with one).
-    val nodes0F = fork(stage("nodes0", shared = false)(mat.nodes.toDF()))
-    val edges0F = fork(stage("edges0")(mat.edges.toDF()))
-    val props0F = fork(stage("properties0")(mat.properties.toDF()))
-    val triplesF = fork(stage("triples")(mat.triples))
-    val dropped = stage("dropped_edges", shared = false)(mat.droppedEdges)
+    val nodes0F = fork(stage("nodes0", shared = false)(mat.get.nodes.toDF()))
+    val edges0F = fork(stage("edges0")(mat.get.edges.toDF()))
+    val props0F = fork(stage("properties0")(mat.get.properties.toDF()))
+    val triplesF = fork(stage("triples")(mat.get.triples))
+    val dropped = stage("dropped_edges", shared = false)(mat.get.droppedEdges)
     val (nodes0, edges0, props0, triples) =
       (await(nodes0F), await(edges0F), await(props0F), await(triplesF))
 
     // --- community + document layers (G2/G3/G4) -----------------------------
     val docMeta = await(docMetaF)
-    val (layer, freeLayer) = Scope.run(Communities.build(
+    val layer = new Scope.Deferred(Communities.build(
       nodes0.as[NodeRow], edges0.as[EdgeRow], props0.as[PropertyRow],
       docMeta.select(col("doc_id"), col("keywords")),
       docMeta.select(col("doc_id"), col("summary"))))
@@ -195,23 +199,25 @@ object BuildPipeline {
     // contract unchanged).
     def unionStage(name: String)(base: DataFrame)(part: => DataFrame): DataFrame =
       checkpoints match {
-        case Some(cp) => cp.stage(name)(base.unionByName(part))
+        case Some(cp) =>
+          Scope.labeled(spark, s"graft-stage:$name")(cp.stage(name)(base.unionByName(part)))
         case None =>
           base.unionByName(Scope.labeled(spark, s"graft-stage:$name-part")(Scope.cut(part).df))
       }
     val nodesF = fork(stage("nodes") {
-      layer.nodesWithCommunity.unionByName(layer.communityNodes).unionByName(layer.docNodes)
+      val l = layer.get
+      l.nodesWithCommunity.unionByName(l.communityNodes).unionByName(l.docNodes)
     })
-    val edgesF = fork(unionStage("edges")(edges0)(layer.communityEdges))
+    val edgesF = fork(unionStage("edges")(edges0)(layer.get.communityEdges))
     val propertiesF = fork(unionStage("properties")(props0) {
-      layer.communityProperties.unionByName(layer.docProperties)
+      layer.get.communityProperties.unionByName(layer.get.docProperties)
     })
     val (nodes, edges, properties) = (await(nodesF), await(edgesF), await(propertiesF))
     // all downstream tables are checkpointed (or derive from checkpoints) —
     // free the materialize/community internals; late lazy consumers
     // (dropped_edges without a work dir) recompute from the logs checkpoint
-    freeMat()
-    freeLayer()
+    mat.free()
+    layer.free()
 
     // --- documents registry (S6) ---------------------------------------------
     val documents = stage("documents", shared = false) {

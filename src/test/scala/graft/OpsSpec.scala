@@ -1025,8 +1025,22 @@ class OpsSpec extends SparkSpec {
 
   test("clean teardown: no-workdir BuildPipeline.run, then cleanup()") {
     assertCleanTeardown {
-      val r = graft.pipeline.BuildPipeline.run(
+      // one cache kind: every build cache is an RDD cut, none a Dataset
+      // cache, so the CacheManager gains no entry at any job of the build
+      val cached = org.apache.spark.sql.CacheEntries.count(spark)
+      val peak = new java.util.concurrent.atomic.AtomicInteger(cached)
+      val probe = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          peak.accumulateAndGet(org.apache.spark.sql.CacheEntries.count(spark), math.max)
+      }
+      spark.sparkContext.addSparkListener(probe)
+      val r = try graft.pipeline.BuildPipeline.run(
         graft.core.Corpus.docs(spark, 20), new graft.extract.DeterministicExtractor)
+      finally {
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(probe)
+      }
+      assert(peak.get === cached, "a build job ran while a Dataset cache was registered")
       (r.triples, r.cleanup)
     }()
   }
